@@ -73,7 +73,7 @@ LAYER_UNITS = {
     "cache.persisted_rdds": "count",
     "op.self_s": "s",
     "op.self_share": "ratio",
-    "op_s.p50": "s",
+    "op_s.traced_p50": "s",
     "op_s.tail": "s",
     "op_s.tail_pct": "%",
     "op_s.n": "count",
@@ -262,7 +262,7 @@ class Harness:
         t_val, t_pct = tail(all_secs)
         out.update({
             "session.start_s": (session_start_s, "s"),
-            "op_s.p50": (statistics.median(traced_secs), "s"),
+            "op_s.traced_p50": (statistics.median(traced_secs), "s"),
             "op_s.tail": (t_val, "s"),
             "op_s.tail_pct": (t_pct, "%"),
             "op_s.n": (float(len(all_secs)), "count"),
