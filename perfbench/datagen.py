@@ -9,11 +9,14 @@ Only the size-defining properties are fixed (row counts, key ranges,
 value ranges, day spread of the events); the seed picks the values.
 Events are spread evenly over 30 days, so every day partition of the
 stream workload's store holds the same number of rows whatever the seed.
+
+    python3 perfbench/datagen.py <out_dir> <seed> <sf> <table>...
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 import numpy as np
 import pandas as pd
@@ -188,3 +191,7 @@ def write_tables(out_dir: str, seed: int, sf: float, tables: tuple[str, ...]) ->
         )
         pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
     return out_dir
+
+
+if __name__ == "__main__":
+    write_tables(sys.argv[1], int(sys.argv[2]), float(sys.argv[3]), tuple(sys.argv[4:]))

@@ -2,8 +2,9 @@
 
 One client runs one op at a time. A run is: start the session, set the
 workload up, one cold op (its end closes ``setup_s``), warm-up ops, then
-the timed window of ``seconds`` wall-clock seconds. Every op's output is
-checked; an op that raises or fails its check counts as failed.
+the timed window: at least ``seconds`` wall-clock seconds and at least
+the workload's ``timed_ops`` ops. Every op's output is checked outside
+the timed region; an op that raises or fails its check counts as failed.
 
 With tracing on, the timed window alternates traced and plain ops. Plain
 ops give the untraced median that ``trace.overhead`` divides by; traced
@@ -14,6 +15,7 @@ workload so that counts repeat exactly across runs of one seed.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import statistics
@@ -27,61 +29,30 @@ import pandas as pd
 
 import tracing
 
+HERE = os.path.dirname(os.path.abspath(__file__))
+
 #: Engine threads and shuffle partitions of every workload: half of a
 #: 4-vCPU host. On such a host shared with other tenants, back-to-back
 #: pass medians were 7.6% apart at local[4] and 1.1% apart at local[2].
 MASTER = "local[2]"
 SHUFFLE_PARTITIONS = 2
 
-#: Minimum number of timed ops, whatever ``seconds`` allows.
-MIN_TIMED_OPS = 3
+#: JVM options of the driver (which runs the local executor). G1 grows the
+#: heap in steps driven by the share of wall time spent in GC, so the
+#: JVM's peak RSS on ``headline_queries`` fell into two groups 30-60%
+#: apart from run to run. The serial collector sizes the heap from the
+#: live data: JVM peak RSS within 5% over three runs of each workload,
+#: op times within G1's run-to-run noise. The JVM picks it by itself on
+#: small machines.
+JVM_OPTIONS = "-XX:+UseSerialGC"
 
-#: Per-layer metrics of every workload, in report order, with units.
-#: Layers a workload does not run report 0; a workload adds its own
-#: through ``extra_layers``.
-LAYER_UNITS = {
-    "session.start_s": "s",
-    "registry.build_s": "s",
-    **{f"{q}.op_s": "s" for q in (
-        "q1", "q7", "q9", "q12", "q17", "q18", "q20", "q21", "q23", "q26", "q27")},
-    "planner.plan_s": "s",
-    "engine.action_s": "s",
-    "engine.jobs": "count",
-    "engine.stages": "count",
-    "engine.tasks": "count",
-    "engine.executor_run_s": "s",
-    "engine.executor_cpu_s": "s",
-    "engine.gc_s": "s",
-    "engine.deserialize_s": "s",
-    "engine.scheduler_delay_s": "s",
-    "engine.shuffle_read_mb": "MB",
-    "engine.shuffle_write_mb": "MB",
-    "engine.spill_mb": "MB",
-    "engine.result_mb": "MB",
-    "cpu.jvm_s": "s",
-    "cpu.pyworker_s": "s",
-    "cpu.driver_py_s": "s",
-    "dsl.parse_s": "s",
-    "plans.run_s": "s",
-    "plans.self_s": "s",
-    "plans.retries": "count",
-    "operators.extract.build_s": "s",
-    "operators.lm.build_s": "s",
-    "operators.similarity.build_s": "s",
-    "operators.prefix.build_s": "s",
-    "operators.build_jobs": "count",
-    "cache.persisted_rdds": "count",
-    "op.self_s": "s",
-    "op.self_share": "ratio",
-    "op_s.traced_p50": "s",
-    "op_s.tail": "s",
-    "op_s.tail_pct": "%",
-    "op_s.n": "count",
-    "op_s.trend": "ratio",
-    "host.loadavg_start": "load",
-    "host.loadavg_end": "load",
-    "trace.overhead": "ratio",
-}
+
+def per_layer_units() -> dict[str, str]:
+    """Per-layer metric names and units, in report order, as
+    ``BENCHMARK.json`` declares them. A layer a workload does not run
+    reports 0."""
+    with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as fh:
+        return {m["name"]: m["unit"] for m in json.load(fh)["per_layer"]}
 
 
 @dataclass
@@ -133,6 +104,8 @@ class OpRecord:
     ok: bool
     traced: bool
     wall: tuple[float, float]
+    #: ``perf_counter`` when ``run`` returned or raised, before the check
+    end: float
     values: dict[str, float]
 
 
@@ -140,8 +113,8 @@ class Harness:
     """Runs one workload's ops and turns them into metrics.
 
     A workload has ``name``, ``tables`` and ``scale`` (what to generate),
-    ``items_per_op``, ``warm_ops``, ``traced_ops``, optionally
-    ``extra_layers``, and the methods ``setup``, ``prepare`` (untimed),
+    ``items_per_op``, ``warm_ops``, ``timed_ops`` (the fewest ops of a
+    timed window), ``traced_ops``, and the methods ``setup``, ``prepare`` (untimed),
     ``run`` (timed), ``verify`` (untimed, returns whether the output is
     right), ``layer_values``, ``finish`` (final check) and ``close``.
     """
@@ -158,7 +131,7 @@ class Harness:
         ctx.op_values = {}
         if ctx.traced_run:
             ctx.spark.sparkContext.setJobGroup(f"op-{index}", f"{self.w.name} {phase}")
-        ok, seconds, cpu0 = False, float("nan"), None
+        ok, seconds, cpu0, end = False, float("nan"), None, None
         wall0 = time.time()
         try:
             self.w.prepare(ctx, index)
@@ -166,8 +139,11 @@ class Harness:
                 cpu0 = tracing.process_cpu()
             with tracer.op(index):
                 t0 = time.perf_counter()
-                out = self.w.run(ctx, index)
-                seconds = time.perf_counter() - t0
+                try:
+                    out = self.w.run(ctx, index)
+                finally:
+                    end = time.perf_counter()
+                seconds = end - t0
             if traced:
                 cpu1 = tracing.process_cpu()
                 for k in cpu1:
@@ -187,22 +163,28 @@ class Harness:
             ctx.spark.catalog.clearCache()
             tracer.enabled = False
         self.ops.append(
-            OpRecord(index, phase, seconds, ok, traced, (wall0, wall1), dict(ctx.op_values))
+            OpRecord(index, phase, seconds, ok, traced, (wall0, wall1),
+                     end if end is not None else time.perf_counter(), dict(ctx.op_values))
         )
 
     def run(self, t_start: float) -> float:
         """Cold op, warm-up, timed window. Returns ``setup_s``: seconds from
-        ``t_start`` to the end of the cold op."""
+        ``t_start`` to the end of the cold op's ``run``; its output check
+        is not part of it."""
         self._one(0, "cold", False)
-        setup_s = time.perf_counter() - t_start
+        setup_s = self.ops[0].end - t_start
         i = 1
         for _ in range(self.w.warm_ops):
             self._one(i, "warm", False)
             i += 1
         window0 = time.perf_counter()
         n = 0
-        # a traced window holds at least ``traced_ops`` traced and as many plain ops
-        min_ops = 2 * self.w.traced_ops if self.ctx.traced_run else MIN_TIMED_OPS
+        # A window holds ``timed_ops`` ops however fast the host is, so the
+        # median is taken at the same point of the JIT drift on every run;
+        # a traced one also holds ``traced_ops`` traced and as many plain ops.
+        min_ops = self.w.timed_ops
+        if self.ctx.traced_run:
+            min_ops = max(min_ops, 2 * self.w.traced_ops)
         while n < min_ops or time.perf_counter() - window0 < self.seconds:
             traced = self.ctx.traced_run and n % 2 == 0
             self._one(i, "timed", traced)
@@ -233,7 +215,7 @@ class Harness:
         span_totals = tracing.per_op_totals(tracer)
         roots = {sp.op_id: sp for sp in tracer.spans if sp.parent is None}
         traced = self.timed(True)
-        units = {**LAYER_UNITS, **getattr(self.w, "extra_layers", {})}
+        units = per_layer_units()
         per_op: list[dict[str, float]] = []
         # a fixed op set, so that counts repeat exactly across runs of one seed
         for o in traced[: self.w.traced_ops]:

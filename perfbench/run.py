@@ -38,7 +38,7 @@ def _parse(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--sf", type=float, default=0.1,
-                   help="scale factor of the generated tables (self-tests use 0.001)")
+                   help="scale factor of the generated tables (self-tests use 0.01)")
     return p.parse_args(argv)
 
 
@@ -55,6 +55,9 @@ def _isolate(work: str) -> dict[str, str]:
         f'-XX:-UsePerfData -Djava.io.tmpdir={paths["tmp"]} -Dderby.system.home={paths["tmp"]}'
     )
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    # Python workers import the engine whatever the working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     return paths
 
 
@@ -104,6 +107,15 @@ def _stop_engine(spark) -> None:
 
 def main(argv: list[str]) -> int:
     args = _parse(argv)
+    # wall-clock seconds of each phase of the run, for the record line
+    phases: dict[str, float] = {}
+    mark = [time.perf_counter()]
+
+    def lap(name: str) -> None:
+        now = time.perf_counter()
+        phases[name] = round(now - mark[0], 3)
+        mark[0] = now
+
     # on SIGTERM, unwind through the ``finally`` blocks that stop the engine
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     sys.path.insert(0, ROOT)
@@ -111,7 +123,6 @@ def main(argv: list[str]) -> int:
     # the engine under test; a checkout without it fails here, before any result
     import event_pipeline_spark.session as session_mod
 
-    import datagen
     import harness
     import tracing
 
@@ -120,11 +131,18 @@ def main(argv: list[str]) -> int:
     try:
         load0 = os.getloadavg()[0]
         workload = _load_workload(args.workload)
-        datagen.write_tables(paths["data"], args.seed, args.sf * workload.scale,
-                             workload.tables)
+        lap("imports")
+        # in a child process, so that the driver's peak RSS is the engine's
+        subprocess.run(
+            [sys.executable, os.path.join(HERE, "datagen.py"), paths["data"],
+             str(args.seed), repr(args.sf * workload.scale), *workload.tables],
+            check=True,
+        )
+        lap("datagen")
 
         conf = {
             "spark.ui.showConsoleProgress": "false",
+            "spark.driver.extraJavaOptions": harness.JVM_OPTIONS,
             "spark.sql.warehouse.dir": os.path.join(paths["state"], "warehouse"),
         }
         if args.trace:
@@ -145,25 +163,32 @@ def main(argv: list[str]) -> int:
             traced_run=bool(args.trace),
         )
         try:
+            lap("session")
             workload.setup(ctx)
+            lap("workload_setup")
             h = harness.Harness(workload, ctx, args.seconds)
             setup_s = h.run(t_start)
+            lap("ops")
             final_ok = workload.finish(ctx)
-            peak_mb = tracing.peak_rss_mb()
+            rss_mb = tracing.peak_rss_mb()
+            lap("finish")
         finally:
             workload.close(ctx)
             _stop_engine(spark)
+            lap("stop")
         load1 = os.getloadavg()[0]
         if args.trace:
             windows = {o.index: o.wall for o in h.timed(True)}
             eventlog = tracing.parse_event_log(paths["eventlog"], windows)
             metrics = h.per_layer(session_start_s, eventlog, (load0, load1))
         else:
-            metrics = h.end_to_end(setup_s, peak_mb)
+            metrics = h.end_to_end(setup_s, sum(rss_mb.values()))
         print("perfbench: " + json.dumps({
             "workload": args.workload, "seed": args.seed, "sf": args.sf,
             "master": harness.MASTER, "shuffle_partitions": harness.SHUFFLE_PARTITIONS,
-            "loadavg": [load0, load1], "ops": [
+            "jvm_options": harness.JVM_OPTIONS,
+            "loadavg": [load0, load1], "phases_s": phases,
+            "peak_rss_mb": {k: round(v, 1) for k, v in rss_mb.items()}, "ops": [
                 [o.phase, round(o.seconds, 4), o.ok] for o in h.ops],
         }))
         failed = h.failed()

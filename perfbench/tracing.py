@@ -196,12 +196,17 @@ def _vm_hwm_kb(pid: int) -> int:
     return 0
 
 
-def peak_rss_mb() -> float:
-    """Sum of VmHWM over this process and all its descendants (the JVM
-    and the JVM's Python workers)."""
+def peak_rss_mb() -> dict[str, float]:
+    """VmHWM in MB of this process (``driver_py``), the JVM (``jvm``) and
+    the JVM's Python workers (``pyworker``, summed); the end-to-end
+    ``peak_rss_mb`` is their sum."""
     table = process_table()
-    pids = [os.getpid(), *descendants(table, os.getpid())]
-    return sum(_vm_hwm_kb(p) for p in pids) / 1024.0
+    me = os.getpid()
+    out = {"driver_py": _vm_hwm_kb(me) / 1024.0, "jvm": 0.0, "pyworker": 0.0}
+    for pid in descendants(table, me):
+        part = "jvm" if table[pid][0] == "java" else "pyworker"
+        out[part] += _vm_hwm_kb(pid) / 1024.0
+    return out
 
 
 # -- Spark event log ---------------------------------------------------------

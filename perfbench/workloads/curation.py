@@ -93,6 +93,7 @@ class DagCuration:
     name = "dag_curation"
     tables = ("documents", "embeddings")
     scale = DOC_SAMPLE
+    timed_ops = 3
     traced_ops = 2
     warm_ops = 0
 

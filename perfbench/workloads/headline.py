@@ -28,6 +28,7 @@ class HeadlineQueries:
     tables = ("customer", "orders", "lineitem", "events", "documents")
     scale = 1.0
     items_per_op = len(HEADLINE)
+    timed_ops = 3
     traced_ops = 2
     warm_ops = 2
 

@@ -62,21 +62,9 @@ def _listing(root: str) -> dict[str, int]:
 
 class StreamUpsert:
     name = "stream_upsert"
-    extra_layers = {
-        "streaming.trigger_s": "s",
-        "streaming.add_batch_s": "s",
-        "streaming.planning_s": "s",
-        "streaming.offsets_s": "s",
-        "streaming.commit_s": "s",
-        "streaming.wait_s": "s",
-        "stores.upsert_s": "s",
-        "stores.partitions_rewritten": "count",
-        "stores.bytes_written_per_row": "B",
-        "stores.files": "count",
-        "stores.rows": "count",
-    }
     tables = ("events",)
     scale = 1.0
+    timed_ops = 10
     traced_ops = 4
     warm_ops = 3
 
