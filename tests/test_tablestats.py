@@ -60,18 +60,31 @@ def test_stats_flip_filtered_dim_to_broadcast(spark, tmp_path, stats_confs):
     )
 
     table = "dim_stats_contract"
-    # ~8k rows x ~60B strings: raw parquet comfortably > 64KB, while
-    # the cat = 'cat_7' slice (1/1000 NDV) estimates ~1000x smaller
+    # 8,000 rows x 60 distinct bytes (a hex SHA-256 prefix per row)
+    # ~= 480KB of raw parquet > 64KB at any file count, while the
+    # cat = 'cat_7' slice (1/1000 NDV) estimates ~1000x smaller. A
+    # constant payload would not do: parquet dictionary-encodes it
+    # away, leaving per-file overhead whose total scales with the
+    # number of files written, i.e. with the core count.
     dim = spark.range(0, 8_000).select(
         F.pmod(F.col("id"), F.lit(1000)).alias("k"),
         F.concat(F.lit("cat_"), F.pmod(F.col("id"), F.lit(1000))).alias(
             "cat"
         ),
-        F.repeat(F.lit("x"), 60).alias("payload"),
+        F.substring(F.sha2(F.col("id").cast("string"), 256), 1, 60).alias(
+            "payload"
+        ),
     )
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     dim.write.option("path", f"{tmp_path}/dim").saveAsTable(table)
     try:
+        on_disk = sum(
+            p.stat().st_size for p in (tmp_path / "dim").rglob("*.parquet")
+        )
+        assert on_disk > 64 * 1024, (
+            "fixture premise: the dimension's raw parquet size must exceed "
+            f"autoBroadcastJoinThreshold (64KB), got {on_disk} B"
+        )
         assert table_stats(spark, table) is None
         before = _plan(_join(spark, table))
         assert "SortMergeJoin" in before
