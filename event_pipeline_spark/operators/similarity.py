@@ -275,36 +275,67 @@ def embedding_near_duplicates(
 
 
 # ---------------------------------------------------------------------------
-# IVF: k-means coarse quantizer + probed clusters
+# Centroid training (one trainer for IVF, k-means and SemDeDup cells,
+# kNN cells) + IVF: k-means coarse quantizer and probed clusters
 # ---------------------------------------------------------------------------
 
 
-def train_ivf_centroids(
-    df: DataFrame,
-    *,
-    n_clusters: int = 16,
-    vec_col: str = "embedding",
-    sample_cap: int = 50_000,
-    iters: int = 8,
-    seed: int = 42,
-) -> np.ndarray:
-    """Coarse quantizer: Lloyd's k-means on a bounded driver sample
-    (normalized vectors → spherical k-means, the cosine-metric form).
-    The sample is capped, so driver memory is bounded regardless of
-    corpus size; at 100 TB you train on ~50k rows and broadcast the
-    (k x d) codebook with the plan — the classic IVF recipe."""
+def _unit_sample(
+    df: DataFrame, vec_col: str, sample_cap: int, seed: int
+) -> tuple[int, np.ndarray]:
+    """(row count, L2-normalized bounded sample) — the one count and
+    one ``sample().collect()`` every trainer pays at build time. The
+    sample is capped, so driver memory is bounded regardless of corpus
+    size."""
     n = df.count()
     frac = min(1.0, sample_cap / max(n, 1))
     sample = np.array(
         [r[0] for r in df.select(vec_col).sample(frac, seed=seed).collect()],
         dtype=np.float64,
     )
+    if len(sample) == 0:
+        raise ValueError(f"cannot train centroids on an empty {vec_col!r} sample")
     sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
+    return n, sample
+
+
+def knn_cell_count(n: int, target_cell_size: int) -> int:
+    """The k ~ n/target rule ``train_centroids`` applies when no k is
+    given: cells sized to a CONSTANT target as the corpus grows, so
+    per-cell work (SemDeDup's quadratic term, kNN candidates) stays
+    bounded instead of growing ~n²/k under a fixed k."""
+    return max(2, -(-int(n) // int(target_cell_size)))
+
+
+def train_centroids(
+    df: DataFrame,
+    *,
+    n_clusters: int | None = 16,
+    target_cluster_size: int = 10_000,
+    vec_col: str = "embedding",
+    sample_cap: int = 50_000,
+    iters: int = 8,
+    seed: int = 42,
+) -> np.ndarray:
+    """Spherical k-means (Lloyd's on normalized vectors, the cosine
+    form) over a bounded driver sample; returns the (k x d) unit
+    centroids. At 100 TB it trains on ~50k rows and the codebook
+    rides the plan (literal expressions or a UDF closure), so
+    assignment is a map with no Spark job of its own.
+
+    ``n_clusters=None`` derives k from the row count by the k ~
+    n/target rule (``knn_cell_count``). k is clamped to the number of
+    sampled rows. Building costs two eager actions, the count and the
+    sample collect: the count sizes the sample fraction and k."""
+    n, sample = _unit_sample(df, vec_col, sample_cap, seed)
+    if n_clusters is None:
+        n_clusters = knn_cell_count(n, target_cluster_size)
+    k = min(n_clusters, len(sample))
     rng = np.random.RandomState(seed)
-    centroids = sample[rng.choice(len(sample), size=n_clusters, replace=False)]
+    centroids = sample[rng.choice(len(sample), size=k, replace=False)]
     for _ in range(iters):
         assign = (sample @ centroids.T).argmax(axis=1)  # nearest by cosine
-        for c in range(n_clusters):
+        for c in range(k):
             members = sample[assign == c]
             if len(members):
                 centroids[c] = members.mean(axis=0)
@@ -445,7 +476,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") < 5)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    centroids = train_ivf_centroids(emb, n_clusters=8)
+    centroids = train_centroids(emb, n_clusters=8)
     return ivf_topk(emb, queries, centroids, k=5, n_probe=3).orderBy(
         "query_id", "rank"
     )
@@ -454,40 +485,30 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register("sim_ivf_topk", q_sim_ivf_topk)
 
 
-# -- embedding clustering (spark.ml KMeans, the idiomatic scale path) ------
+# -- embedding clustering ---------------------------------------------------
 
 def cluster_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
     k: int = 8,
-    max_iter: int = 20,
     seed: int = 42,
 ) -> DataFrame:
-    """Partition an embedding column into ``k`` clusters with spark.ml
-    KMeans (the library's distributed Lloyd's — don't hand-roll what MLlib
-    tunes: it broadcasts centroids, aggregates partial sums map-side, and
-    its cost is one pass per iteration at any scale). Output: input
-    columns + ``cluster``.
-
-    This is the general-purpose sibling of the IVF index's internal
-    spherical k-means (``ivf_topk`` trains on a bounded sample for
-    codebook speed; this trains on the full data for assignment quality).
+    """Input columns + ``cluster``: each row's nearest of ``k``
+    spherical k-means centroids. Centroids come from ``train_centroids``
+    (an eager count and sample collect at build time, bounded driver
+    memory); the assignment is ``assign_fixed_centroids`` in the plan,
+    so the action is one map over the rows with no per-iteration job.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.withColumn("__features", array_to_vector(F.col(vec_col)))
-    model = KMeans(
-        k=k, seed=seed, maxIter=max_iter,
-        featuresCol="__features", predictionCol="cluster",
-    ).fit(feats)
-    return model.transform(feats).drop("__features")
+    centroids = train_centroids(df, n_clusters=k, vec_col=vec_col, seed=seed)
+    return df.withColumn(
+        "cluster", assign_fixed_centroids(vec_col, centroids.tolist())
+    )
 
 
 def q_sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-size histogram of k-means over the embeddings table
-    (rows-only: centroid init is seed/partitioning-dependent; recovery of
-    the generator's ground-truth labels is unit-tested as purity)."""
+    (rows-only: centroid init is seed/partitioning-dependent; the
+    SSE-beats-random and determinism contracts are unit-tested)."""
     emb = _emb(spark, sf_dir)
     k = emb.select("label").distinct().count()
     out = cluster_embeddings(emb, "embedding", k=k)
@@ -504,10 +525,18 @@ _register("sim_kmeans_clusters", q_sim_kmeans)
 # Product quantization (round 3): m-subvector codebooks + ADC search —
 # the memory side of IVF-PQ. A d-dim float32 vector (d*4 bytes) becomes
 # m uint8 codes: 64-dim → 8 bytes, a 32x cut, which is what lets a
-# trillion-vector index fit a cluster's RAM. Codebooks are trained on a
-# capped driver sample (same recipe as IVF's coarse quantizer) and ride
-# the plan as a broadcast; encode and search are Arrow-batched numpy.
+# trillion-vector index fit a cluster's RAM. Codebooks are trained on
+# the capped driver sample ``train_centroids`` also draws (L2 Lloyd's
+# per subvector) and ride the plan as a broadcast; encode and search
+# are Arrow-batched numpy.
 # ---------------------------------------------------------------------------
+
+
+def _nearest_l2(block: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid by L2. ||b - c||² =
+    ||b||² - 2 b·c + ||c||², and ||b||² is constant per row, so the
+    argmin needs only an (n x k) temporary, never (n x k x sub)."""
+    return (-2.0 * (block @ cent.T) + (cent**2).sum(axis=1)[None, :]).argmin(axis=1)
 
 
 def train_pq_codebooks(
@@ -523,13 +552,7 @@ def train_pq_codebooks(
     """Per-subvector Lloyd's k-means on a bounded sample → codebooks of
     shape (m, n_codes, d/m). L2 metric in code space (the PQ standard);
     callers normalize vectors first when cosine ranking is wanted."""
-    n = df.count()
-    frac = min(1.0, sample_cap / max(n, 1))
-    sample = np.array(
-        [r[0] for r in df.select(vec_col).sample(frac, seed=seed).collect()],
-        dtype=np.float64,
-    )
-    sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
+    _, sample = _unit_sample(df, vec_col, sample_cap, seed)
     d = sample.shape[1]
     if d % m_subvectors:
         raise ValueError(f"dim {d} not divisible by m={m_subvectors}")
@@ -541,8 +564,7 @@ def train_pq_codebooks(
         block = sample[:, mi * sub : (mi + 1) * sub]
         cent = block[rng.choice(len(block), size=k, replace=False)]
         for _ in range(iters):
-            d2 = ((block[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
+            assign = _nearest_l2(block, cent)
             for c in range(k):
                 members = block[assign == c]
                 if len(members):
@@ -560,8 +582,7 @@ def pq_encode(
 ) -> DataFrame:
     """Vectors → m uint8-range codes (stored as array<smallint>): per
     subvector, the index of the nearest codebook centroid."""
-    m, k, sub = books.shape
-    flat = books.reshape(m * k, sub)
+    m, _, sub = books.shape
 
     @F.pandas_udf("array<smallint>")
     def enc(vecs: pd.Series) -> pd.Series:
@@ -572,14 +593,7 @@ def pq_encode(
         n = len(x)
         codes = np.empty((n, m), np.int16)
         for mi in range(m):
-            block = x[:, mi * sub : (mi + 1) * sub]  # (n, sub)
-            cent = flat[mi * k : (mi + 1) * k]  # (k, sub)
-            # ||b - c||^2 = ||b||^2 - 2 b.c + ||c||^2 ; argmin over c
-            d2 = (
-                -2.0 * (block @ cent.T)
-                + (cent**2).sum(axis=1)[None, :]
-            )
-            codes[:, mi] = d2.argmin(axis=1).astype(np.int16)
+            codes[:, mi] = _nearest_l2(x[:, mi * sub : (mi + 1) * sub], books[mi])
         return pd.Series(list(codes))
 
     return df.select(id_col, enc(F.col(vec_col)).alias("pq_codes"))
@@ -663,24 +677,8 @@ def ivfpq_topk(
     probed cells only — the composition that serves billion-vector
     corpora from RAM. Both codebooks train on capped samples and ride
     the plan as broadcasts."""
-    m, k, sub = books.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    qsims = centroids @ q
+    qsims = centroids @ np.asarray(query_vec, dtype=np.float64)
     probe_cells = [int(c) for c in np.argsort(-qsims)[:n_probe]]
-
-    lut = np.empty((m, k))
-    for mi in range(m):
-        qs = q[mi * sub : (mi + 1) * sub]
-        lut[mi] = ((books[mi] - qs[None, :]) ** 2).sum(axis=1)
-
-    @F.pandas_udf("double")
-    def adc(codes: pd.Series) -> pd.Series:
-        c = np.array(codes.tolist(), dtype=np.int64)
-        if c.size == 0:
-            return pd.Series([], dtype="float64")
-        return pd.Series(lut[np.arange(m)[None, :], c].sum(axis=1))
-
     index = corpus.select(
         F.col(id_col),
         F.element_at(_assign_udf(centroids, 1)(F.col(vec_col)), 1).alias("cell"),
@@ -692,18 +690,14 @@ def ivfpq_topk(
         id_col=id_col,
         vec_col=vec_col,
     )
-    return (
-        encoded.select(id_col, F.round(adc(F.col("pq_codes")), 6).alias("adc_dist"))
-        .orderBy("adc_dist", id_col)
-        .limit(top_k)
-    )
+    return pq_topk(encoded, query_vec, books, top_k=top_k, id_col=id_col)
 
 
 def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-probe + PQ-rank top-10 for the deterministic query (vec_id
     0). Rows-only by design; recall contract in test_similarity.py."""
     emb = _emb(spark, sf_dir)
-    centroids = train_ivf_centroids(emb, n_clusters=8)
+    centroids = train_centroids(emb, n_clusters=8)
     books = train_pq_codebooks(emb, m_subvectors=8)
     qv = np.array(
         emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -794,7 +788,7 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     k: int | None = None,
-    target_cluster_size: int | None = None,
+    target_cluster_size: int = 10_000,
     centroids: list[list[float]] | None = None,
     seed: int = 42,
     block: int = 1024,
@@ -808,38 +802,32 @@ def semantic_dedup(
     vectorized gram-matrix blocks (``block`` rows at a time, so memory
     is block*n_c, not n_c²) + union-find over above-threshold pairs.
 
-    Clustering: by default k-means with k derived from
-    ``target_cluster_size`` (k = max(2, ceil(n / target)), the paper's
-    k ~ n/target rule — cluster size, and hence the quadratic
-    per-cluster term, stays bounded as the corpus grows). Pass ``k``
-    to pin the cluster count explicitly, or ``centroids`` (literal
-    vectors) for the deterministic-assignment mode whose full
-    keep/kept_by output an external oracle can recompute (cosines are
-    rounded to 7 decimals before every comparison in that mode's
-    assignment; the in-kernel rounding below applies in all modes).
+    Clustering: by default spherical k-means centroids from
+    ``train_centroids`` with k derived from ``target_cluster_size``
+    (k = max(2, ceil(n / target)), the paper's k ~ n/target rule —
+    cluster size, and hence the quadratic per-cluster term, stays
+    bounded as the corpus grows). Pass ``k`` to pin the cluster count,
+    or ``centroids`` (literal vectors) for the deterministic mode whose
+    full keep/kept_by output an external oracle can recompute. Either
+    way rows are assigned in the plan by ``assign_fixed_centroids``
+    (cosines rounded to 7 decimals before the argmax; the in-kernel
+    rounding below applies in all modes).
 
-    .. versionchanged:: round 6
-       ``k`` defaulted to 8; it now defaults to ``None``, which derives
-       k from ``target_cluster_size`` via an EAGER ``df.count()`` at
-       composition time (one scalar job — DataFrame construction is no
-       longer lazy on this path). Callers composing pipelines that must
-       stay lazy, or relying on the old fixed fan-out, should pass
-       ``k`` explicitly (the in-repo query passes ``k=8``).
+    Building with trained centroids is eager: it runs two Spark actions,
+    a ``df.count()`` (sizing k and the sample) and a bounded
+    ``sample().collect()`` the driver trains on. The literal-centroid
+    mode starts no job until the caller's action.
     """
-    if centroids is not None:
-        clustered = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            assign_fixed_centroids(vec_col, centroids).alias("cluster"),
-        )
-    else:
-        if k is None:
-            n = df.count()  # scalar, one job — the k ~ n/target rule
-            tcs = target_cluster_size or 10_000
-            k = max(2, -(-n // tcs))
-        clustered = cluster_embeddings(df, vec_col, k=k, seed=seed).select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "cluster"
-        )
+    if centroids is None:
+        centroids = train_centroids(
+            df, n_clusters=k, target_cluster_size=target_cluster_size,
+            vec_col=vec_col, seed=seed,
+        ).tolist()
+    clustered = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        assign_fixed_centroids(vec_col, centroids).alias("cluster"),
+    )
 
     def dedup_group(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
@@ -2777,13 +2765,6 @@ FROM agg, ns
 # ---------------------------------------------------------------------------
 
 
-def knn_cell_count(n: int, target_cell_size: int) -> int:
-    """The k ~ n/target rule (``semantic_dedup``'s): cells sized to a
-    CONSTANT target as the corpus grows, so per-cell candidate work
-    stays bounded instead of growing ~n²/k under a fixed k."""
-    return max(2, -(-int(n) // int(target_cell_size)))
-
-
 def knn_graph_exact(
     corpus: DataFrame,
     *,
@@ -2802,39 +2783,28 @@ def knn_graph_exact(
     co-partition on the cell id, nothing corpus-sized broadcasts —
     the shape that survives when "queries" is the whole 100 TB corpus.
 
-    Cell count (round-10 change): by default centroids are TRAINED
-    (spark.ml KMeans) with k = max(2, ceil(n / target_cell_size)) —
-    the ``semantic_dedup`` k ~ n/target rule — so per-cell candidate
-    count stays ~n_probe · target as the corpus grows. A FIXED cell
-    count would make candidates grow ~n²/cells (the round-9 design
-    gap). Deriving k runs an eager ``corpus.count()`` plus the KMeans
-    fit at composition time — this path is not lazy. Pass literal
-    ``centroids`` for the deterministic-assignment variant an
-    external oracle can recompute (the registered query does, keeping
-    its fixed 8-cell spine); that form is the ORACLE variant, not the
-    scale path."""
+    Cells: by default centroids are trained by ``train_centroids``
+    with k = max(2, ceil(n / target_cell_size)) — the k ~ n/target
+    rule of ``knn_cell_count`` — so the per-cell candidate
+    count stays ~n_probe · target as the corpus grows (a fixed cell
+    count would make candidates grow ~n²/cells). Building on this path
+    is eager: two Spark actions, the count that sizes k and the bounded
+    sample the driver trains on. Assignment and probing are literal-
+    centroid expressions in the plan. Pass literal ``centroids`` for
+    the deterministic variant an external oracle can recompute (the
+    registered query does, with a fixed 8-cell spine); that form is
+    the ORACLE variant, not the scale path, and starts no build job."""
     if centroids is None:
-        n = corpus.count()
-        if n < 2:
+        centroids = train_centroids(
+            corpus, n_clusters=None, target_cluster_size=target_cell_size,
+            vec_col=vec_col, seed=seed,
+        ).tolist()
+        if len(centroids) < 2:
             raise ValueError(
                 f"knn_graph_exact needs a corpus of >= 2 vectors to "
-                f"train centroids (got {n}); pass literal centroids "
-                f"for degenerate corpora"
+                f"train centroids (got {len(centroids)}); pass literal "
+                f"centroids for degenerate corpora"
             )
-        # clamp to n: KMeans fails opaquely when k exceeds the number
-        # of (distinct) points (round-10 ADVICE)
-        n_cells = min(knn_cell_count(n, target_cell_size), n)
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feats = corpus.withColumn(
-            "__features", array_to_vector(F.col(vec_col))
-        )
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=20,
-            featuresCol="__features", predictionCol="__cell",
-        ).fit(feats)
-        centroids = [list(map(float, c)) for c in model.clusterCenters()]
     cells = corpus.select(
         F.col(id_col).alias("corpus_id"),
         F.col(vec_col).alias("cv"),

@@ -74,13 +74,13 @@ def test_neardup_pairs_verified(emb):
 
 
 def test_ivf_recall(emb, queries):
-    from event_pipeline_spark.operators.similarity import ivf_topk, train_ivf_centroids
+    from event_pipeline_spark.operators.similarity import ivf_topk, train_centroids
 
     exact = {
         (r["query_id"], r["corpus_id"])
         for r in cosine_topk(emb, queries, k=5).collect()
     }
-    centroids = train_ivf_centroids(emb, n_clusters=8)
+    centroids = train_centroids(emb, n_clusters=8)
     assert centroids.shape == (8, 64)
     approx = {
         (r["query_id"], r["corpus_id"])
@@ -88,6 +88,13 @@ def test_ivf_recall(emb, queries):
     }
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.5, f"IVF recall@5 = {recall}"
+
+    # a frame with fewer rows than clusters trains one centroid per row
+    small = train_centroids(emb.where(F.col("vec_id") < 3), n_clusters=8)
+    assert small.shape == (3, 64)
+    assert np.allclose(np.linalg.norm(small, axis=1), 1.0)
+    with pytest.raises(ValueError, match="empty"):
+        train_centroids(emb.where(F.col("vec_id") < 0), n_clusters=8)
 
 
 def test_kmeans_quality_and_determinism(spark, sf_dir):
@@ -227,11 +234,11 @@ def test_ivfpq_recall_against_bruteforce(spark, emb):
 
     from event_pipeline_spark.operators.similarity import (
         ivfpq_topk,
-        train_ivf_centroids,
+        train_centroids,
         train_pq_codebooks,
     )
 
-    centroids = train_ivf_centroids(emb, n_clusters=8)
+    centroids = train_centroids(emb, n_clusters=8)
     books = train_pq_codebooks(emb, m_subvectors=8)
     qv = np.array(
         emb.where(F.col("vec_id") == 0).select("embedding").first()[0],
@@ -1084,8 +1091,7 @@ def test_knn_graph_trained_cells_production_path(spark):
 
 def test_knn_graph_degenerate_corpus_raises(spark):
     """Trained-centroid default needs >= 2 vectors; a 1-row corpus gets
-    a clear ValueError instead of an opaque KMeans failure (round-10
-    ADVICE)."""
+    a clear ValueError, not one centroid and a degenerate graph."""
     import pytest
 
     from event_pipeline_spark.operators.similarity import knn_graph_exact
@@ -1095,3 +1101,22 @@ def test_knn_graph_degenerate_corpus_raises(spark):
     )
     with pytest.raises(ValueError, match="2 vectors"):
         knn_graph_exact(one, k=1)
+
+
+@pytest.mark.parametrize("build", ["semantic_dedup", "knn_graph_exact"])
+def test_trained_centroid_build_starts_no_per_iteration_jobs(spark, emb, build):
+    """Building a trained-centroid plan costs the trainer's count and
+    sample collect, not one Spark job per Lloyd iteration; the
+    assignment runs inside the plan."""
+    from event_pipeline_spark.operators import similarity
+
+    sc = spark.sparkContext
+    group = f"build-{build}"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(similarity, build)(emb)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(jobs) <= 3, f"{build} started {len(jobs)} jobs at build time"
