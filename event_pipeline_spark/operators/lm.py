@@ -14,21 +14,27 @@ Machine Translation"):
 
 Spark-first architecture — **no UDF anywhere**:
 
-- counting is one JVM pass per order: ``transform(sequence(...))``
-  builds the gram strings inside the array, ``explode`` + ``groupBy``
-  counts them (map-side partial aggregation; the shuffle carries
-  (gram, partial-count) pairs, never documents);
-- scoring is a left-join of the position table against the pruned
-  count tables: with ``min_count`` pruning the numerator tables are
-  small and AQE broadcasts them, so scoring is a map stage. Backoff
-  resolution is a CASE over the join results — whole-stage codegen,
-  no Python in the hot path. (An Arrow UDF over a broadcast dict is
-  the alternative when the model must be one opaque artifact; the
-  join form is preferred because it stays JVM-side and lets pruning /
-  broadcast decisions ride Catalyst.)
-- denominator (context) tables are never pruned — pruning only drops
-  numerator entries, so backoff stays well-defined for any
-  ``min_count``.
+- counting is ONE JVM pass over the training frame for every order:
+  ``transform(sequence(...))`` builds all k-gram strings, k = 1..order,
+  inside the array, one ``explode`` + ``groupBy`` counts them
+  (map-side partial aggregation; the shuffle carries (gram,
+  partial-count) pairs, never documents). Orders share the key space
+  without colliding: a k-gram holds k-1 separators, a token none;
+- scoring is a left-join of the position table against that one count
+  table, once per lookup (w, then g_k and ctx_k per order). Every
+  lookup reads the same aggregate, so the plan runs one shuffle and
+  reuses it; AQE broadcasts the vocabulary-sized table, so scoring is
+  a map stage. Backoff resolution is a CASE over the join results —
+  whole-stage codegen, no Python in the hot path. (An Arrow UDF over a
+  broadcast dict is the alternative when the model must be one opaque
+  artifact; the join form is preferred because it stays JVM-side and
+  lets pruning / broadcast decisions ride Catalyst.)
+- the token total N is an in-plan scalar subquery over the same
+  aggregate (its separator-free grams), so building a plan starts no
+  Spark job: the counting runs at the caller's action;
+- ``min_count`` pruning is a filter above the aggregate on the
+  numerator lookups only; context lookups stay complete, so backoff
+  stays well-defined for any ``min_count``.
 
 Registered queries:
 - ``lm_score_positions`` [oracle, exact integers] — train on even
@@ -81,33 +87,35 @@ def whitespace_tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def ngram_count_table(
-    docs: DataFrame, *, text_col: str, n: int, min_count: int = 1
+def _gram_count_table(
+    docs: DataFrame, *, text_col: str, order: int
 ) -> DataFrame:
-    """(gram string, cnt) for all ``n``-grams — one JVM pass, the gram
-    strings are built inside the token array before the explode."""
+    """(gram string, cnt) for every k-gram, k = 1..``order``, in one
+    explode + aggregate. The orders share one key space without
+    colliding: a k-gram string holds exactly k-1 separators and a
+    whitespace token holds none."""
     from event_pipeline_spark.operators.text import bind
 
-    # bind(): route the token array through a lambda variable so the
-    # split is evaluated once, not once per gram (see text.bind).
-    grams = bind(
-        whitespace_tokens(F.col(text_col)),
-        lambda a: F.when(
-            F.size(a) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(a) - n + 1),
-                lambda i: F.array_join(F.slice(a, i, n), SEP),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
-    out = (
-        docs.select(F.explode(grams).alias("gram"))
+    def grams(a):  # a = bound token array (see text.bind)
+        return F.concat(
+            *[
+                F.when(
+                    F.size(a) >= k,
+                    F.transform(
+                        F.sequence(F.lit(1), F.size(a) - k + 1),
+                        lambda i: F.array_join(F.slice(a, i, k), SEP),
+                    ),
+                ).otherwise(F.array().cast("array<string>"))
+                for k in range(1, order + 1)
+            ]
+        )
+
+    every = bind(whitespace_tokens(F.col(text_col)), grams)
+    return (
+        docs.select(F.explode(every).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if min_count > 1:
-        out = out.where(F.col("cnt") >= min_count)
-    return out
 
 
 def _position_table(
@@ -168,45 +176,38 @@ def lm_score_positions(
     pos = _position_table(
         docs, id_col=id_col, text_col=text_col, order=order
     )
-    # count tables: numerator tables pruned, context tables complete
-    uni = ngram_count_table(train, text_col=text_col, n=1)
-    total = train.select(
-        F.sum(F.size(whitespace_tokens(F.col(text_col)))).alias("n")
-    )
-    n_total = total.collect()[0]["n"] or 0
-    scored = pos
-    uni_pruned = uni.where(F.col("cnt") >= min_count) if min_count > 1 else uni
-    scored = scored.join(
-        uni_pruned.select(F.col("gram").alias("w"), F.col("cnt").alias("c1")),
-        "w",
-        "left",
-    )
+    # one count table for every order, read by every lookup through one
+    # reused shuffle: numerator lookups pruned, context lookups complete
+    counts = _gram_count_table(train, text_col=text_col, order=order)
+    numer = counts.where(F.col("cnt") >= min_count) if min_count > 1 else counts
+
+    def lookup(table, key, cnt):
+        return table.select(F.col("gram").alias(key), F.col("cnt").alias(cnt))
+
+    scored = pos.join(lookup(numer, "w", "c1"), "w", "left")
     for k in range(2, order + 1):
-        ck = ngram_count_table(
-            train, text_col=text_col, n=k, min_count=min_count
-        )
-        ctx = (
-            uni
-            if k == 2
-            else ngram_count_table(train, text_col=text_col, n=k - 1)
-        )
         scored = scored.join(
-            ck.select(F.col("gram").alias(f"g{k}"), F.col("cnt").alias(f"c{k}")),
-            f"g{k}",
-            "left",
-        ).join(
-            ctx.select(
-                F.col("gram").alias(f"ctx{k}"), F.col("cnt").alias(f"cc{k}")
-            ),
-            f"ctx{k}",
-            "left",
+            lookup(numer, f"g{k}", f"c{k}"), f"g{k}", "left"
+        ).join(lookup(counts, f"ctx{k}", f"cc{k}"), f"ctx{k}", "left")
+    # training token total = the unigram (separator-free) counts, an
+    # in-plan scalar over the same aggregate. The IS NOT NULL repeats
+    # the filter Catalyst infers on the join sides, so the subquery's
+    # subtree matches theirs and reuses their exchange.
+    n_total = (
+        counts.where(F.col("gram").isNotNull())
+        .agg(
+            F.coalesce(
+                F.sum(F.when(~F.col("gram").contains(SEP), F.col("cnt"))),
+                F.lit(0),
+            )
         )
+        .scalar()
+    )
     # available context length at position i (i is 1-based)
     avail = F.least(F.col("i") - 1, F.lit(order - 1))
-    num, den, level = None, None, None
     # build the CASE from unigram base up to the full order
     num = F.coalesce(F.col("c1"), F.lit(1))
-    den = F.lit(n_total)
+    den = n_total
     level = avail
     for k in range(2, order + 1):
         hit = (F.col("i") >= k) & F.col(f"c{k}").isNotNull()
@@ -371,7 +372,7 @@ def lm_bucket_select(
     / tail by the corpus's perplexity terciles (CCNet trains on the
     head+middle, drops the tail).
 
-    Thresholds are two scalar aggregates broadcast back over the
+    Thresholds are two percentiles in one scalar subquery over the
     corpus — never a global sort/ntile window (which would collapse to
     one partition at scale). ``exact_thresholds=True`` uses exact
     ``percentile`` (buffers values per aggregate — fine at oracle
@@ -387,20 +388,23 @@ def lm_bucket_select(
         alpha=alpha,
     )
     pct = F.percentile if exact_thresholds else F.approx_percentile
-    # two scalars to the driver, inlined as literals: the labeling pass
-    # is then a pure codegen projection (a one-row broadcast cross join
-    # would plan as BroadcastNestedLoopJoin — flagged by the plan
-    # audit, and an extra operator for no gain)
-    row = w.agg(
-        pct(F.col("ppl"), F.lit(1.0 / 3)).alias("_t1"),
-        pct(F.col("ppl"), F.lit(2.0 / 3)).alias("_t2"),
-    ).collect()[0]
-    t1, t2 = row["_t1"], row["_t2"]
+    # both thresholds are one in-plan scalar subquery over ``w``, which
+    # reuses the labeling pass's shuffle: the labeling stays a codegen
+    # projection (a one-row broadcast cross join would plan as
+    # BroadcastNestedLoopJoin — flagged by the plan audit, and an extra
+    # operator for no gain)
+    th = w.agg(
+        F.struct(
+            pct(F.col("ppl"), F.lit(1.0 / 3)).alias("t1"),
+            pct(F.col("ppl"), F.lit(2.0 / 3)).alias("t2"),
+        )
+    ).scalar()
+    t1, t2 = th["t1"], th["t2"]
     return w.select(
         F.col(id_col),
         F.col("ppl"),
-        F.when(F.col("ppl") <= F.lit(t1), F.lit("head"))
-        .when(F.col("ppl") <= F.lit(t2), F.lit("middle"))
+        F.when(F.col("ppl") <= t1, F.lit("head"))
+        .when(F.col("ppl") <= t2, F.lit("middle"))
         .otherwise(F.lit("tail"))
         .alias("bucket"),
     )
@@ -434,7 +438,7 @@ ORDER BY doc_id
 def _kn_pair_table(train: DataFrame, *, text_col: str) -> DataFrame:
     """(v, w, c): adjacent-token bigram counts with the two words kept
     as separate columns (KN needs per-side marginals, so the joined
-    gram-string form of ``ngram_count_table`` is the wrong shape).
+    gram-string form of ``_gram_count_table`` is the wrong shape).
     One JVM pass: pairs are built inside the bound token array, the
     shuffle carries (v, w, partial-count) — never documents."""
     from event_pipeline_spark.operators.text import bind
@@ -545,13 +549,15 @@ def lm_kn_perplexity(
     comp = lm_kn_components(
         docs, train, id_col=id_col, text_col=text_col
     )
-    b = _kn_pair_table(train, text_col=text_col).count()  # N1+(..): scalar
+    # N1+(..): an in-plan scalar subquery, so the build starts no job
+    pairs = _kn_pair_table(train, text_col=text_col)
+    b = pairs.agg(F.count(F.lit(1))).scalar()
     nb = (
         F.when(F.col("n1bwd") > 0, F.col("n1bwd"))
         .otherwise(F.lit(1))
         .cast("double")
     )
-    pc = nb / F.lit(float(b))
+    pc = nb / b.cast("double")
     d = F.lit(float(discount))
     p = F.when(
         (F.col("i") >= 2) & (F.col("ctxc") > 0),

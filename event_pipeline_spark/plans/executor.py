@@ -17,11 +17,17 @@ Walks the PipelineNode graph with the reference's routing semantics
   (Spark's task retries handle executor-side faults; the whitelist
   semantics, base.py:136-147, only exist here).
 
-Spark-first notes: events build lazy plans; "executing" a context is plan
-composition, not an action. The only forced actions are (a) evaluation
-of row-level error columns when an event opts in (``row_level_errors``)
-— one tiny aggregate — and (b) whatever the terminal sink does. At 100 TB
-the driver walk is O(graph), invariant to data size.
+Spark-first notes: each event's ``process()`` returns a DataFrame and
+"executing" a context composes those plans. The runner itself forces
+only (a) evaluation of row-level error columns when an event opts in
+(``row_level_errors``) — one tiny aggregate — and (b) whatever the
+terminal sink does. That is not a laziness guarantee: an operator may
+start Spark jobs while it builds its plan, and those run inside
+``process()``. On the web-curation path ``semantic_dedup``'s trainer
+starts 3 and ``select_token_budget``'s prefix offsets start the rest
+(``tools/eager_audit.py`` lists every such query; ROADMAP direction 2
+tracks them). At 100 TB the driver walk is O(graph), invariant to data
+size.
 """
 
 from __future__ import annotations

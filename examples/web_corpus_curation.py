@@ -2,8 +2,7 @@
 
 The round-5 stages composed in the order a real web pipeline runs them
 — each stage's operator is individually oracle-checked; this example
-pins that they COMPOSE (schemas line up, laziness holds, one job runs
-at the final action):
+pins that they COMPOSE (schemas line up, one DataFrame comes out):
 
     Extract |-> Perplexity-filter |-> SemDeDup |-> Budget-select
 
@@ -18,6 +17,14 @@ at the final action):
   back by doc id;
 - **Budget-select**: the distributed prefix sum fills a global token
   budget best-first by (negated) perplexity (`operators/prefix.py`).
+
+Building the plan is not free of Spark jobs. At sf0.01 ``curate()``
+starts 16 jobs before any action: ``semantic_dedup``'s centroid
+trainer starts 3 (a count and a sample collect), and
+``select_token_budget``'s per-partition offsets start the other 13,
+each of which runs the upstream stages. The LM stage starts none (its
+token total is an in-plan scalar). ROADMAP direction 2 tracks moving
+the rest into the plan; ``tools/eager_audit.py`` counts them per query.
 
 Run:  python examples/web_corpus_curation.py [sf_dir]
 """

@@ -7,6 +7,8 @@ corpus, independent of the implementation.
 from __future__ import annotations
 
 import math
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -114,6 +116,88 @@ def test_no_python_in_plan(spark, corpora):
         .toString()
     )
     assert "EvalPython" not in plan  # fully JVM-side
+
+
+def test_perplexity_build_starts_no_jobs(spark, corpora):
+    """The training token total is an in-plan scalar, not a driver
+    collect: building the perplexity plan starts no Spark job."""
+    docs = spark.createDataFrame([(10, "a b c")], "doc_id long, text string")
+    sc = spark.sparkContext
+    group = "build-lm_doc_perplexity"
+    sc.setJobGroup(group, group)
+    try:
+        lm.lm_doc_perplexity(docs, corpora)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(jobs) == 0, f"lm_doc_perplexity started {len(jobs)} jobs at build time"
+
+
+def _final_plan(plan: str) -> str:
+    """The executed plan string without its ``== Initial Plan ==``
+    sections (the top-level one and each subquery's)."""
+    keep, cut = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :+-|"))
+        if cut is not None and col > cut:
+            continue
+        cut = None
+        if "== Initial Plan ==" in line:
+            cut = line.index("+-") if "+-" in line else 0
+            continue
+        keep.append(line)
+    return "\n".join(keep)
+
+
+def test_training_grams_are_shuffled_once(spark, sf_dir, tmp_path):
+    """Every order is counted by ONE explode + aggregate of the training
+    frame: after an action, the final plan holds one shuffle over the
+    gram explode, and the five lookups and the token-total subquery
+    read it as ReusedExchange.
+
+    The query reads a copy of the documents table: other test modules
+    cache the shared table for the session, and over a cached source
+    AQE plans one table-cache stage per consumer and reuses no exchange
+    above them."""
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), tmp_path)
+    df = lm.q_lm_score_positions(spark, str(tmp_path))
+    df.collect()
+    final = _final_plan(df._jdf.queryExecution().executedPlan().toString())
+    assert final.count("Generate explode(") == 1, final
+    gram_shuffles = [
+        ln for ln in final.splitlines()
+        if "Exchange hashpartitioning(gram" in ln and "ReusedExchange" not in ln
+    ]
+    assert len(gram_shuffles) == 1, final
+    # order 3: w, g2, ctx2, g3, ctx3 lookups + the token-total subquery
+    assert final.count("ReusedExchange") == 5, final
+
+
+@pytest.mark.parametrize(
+    "extra, want",
+    [
+        ([(4, "   ")], 9),  # whitespace-only text splits to one "" token
+        ([(4, None)], 8),  # NULL text has no tokens
+        (None, 0),  # empty train frame
+    ],
+    ids=["whitespace_only", "null_text", "empty_train"],
+)
+def test_token_total_edge_cases(spark, extra, want):
+    """The in-plan token total (unigram counts summed) equals the
+    ``sum(size(tokens))`` total of the training frame, coalesced to 0."""
+    rows = [] if extra is None else TRAIN + extra
+    train = spark.createDataFrame(rows, "doc_id long, text string")
+    total = train.select(
+        F.sum(F.size(lm.whitespace_tokens(F.col("text"))))
+    ).collect()[0][0]
+    assert (total or 0) == want
+    docs = spark.createDataFrame([(11, "b a x c")], "doc_id long, text string")
+    got = _rows(lm.lm_score_positions(docs, train))
+    # i=1 always resolves at the unigram level: den is the token total
+    assert got[(11, 1)][1] == want
+    # i=3: OOV 'x' backs off twice to 1/N
+    assert got[(11, 3)] == (1, want, 2)
 
 
 def test_bucket_select_terciles(spark, sf_dir):
