@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from event_pipeline_spark.operators.udf import once_per_row
+
 QUERIES = {}
 ORACLES = {}
 
@@ -123,6 +125,7 @@ def afp_audio(
 ) -> DataFrame:
     """(clip_id, afp): one Arrow-batched decode+fingerprint pass."""
 
+    @once_per_row
     @pandas_udf("long")
     def _fp(payload: pd.Series) -> pd.Series:
         return pd.Series([afp64(p) for p in payload], dtype="int64")

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from event_pipeline_spark.cache import pin
 from event_pipeline_spark.operators.text import normalized_fingerprint, tokens
+from event_pipeline_spark.operators.udf import once_per_row
 
 QUERIES = {}
 ORACLES = {}
@@ -396,6 +397,7 @@ def _simhash_udf():
     shifts = np.arange(63, dtype=np.uint64)  # bit 63 (sign) left 0:
     one = np.uint64(1)                       # keeps ids positive longs
 
+    @once_per_row
     @F.pandas_udf("long")
     def sh(texts: pd.Series) -> pd.Series:
         out = np.zeros(len(texts), dtype=np.int64)

@@ -16,7 +16,14 @@ Everything upstream of the parse is JVM-side; the parse itself is one
 Arrow-batched pandas UDF over the stdlib ``html.parser`` (tolerant of
 malformed markup, no external deps) — linear in document length, no
 shuffle, no state: at 100 TB this is a pure map stage that scales with
-executors and leaves scan pushdown/pruning untouched.
+executors and leaves column pruning untouched.
+
+The UDF is marked ``once_per_row`` (``operators/udf.py``): a caller's
+filter on the text, such as ``where(length(text) > 0)``, would
+otherwise be pushed below the extraction and the plan would parse
+every page twice. The price is that a filter on another column (the
+curation example's ``doc_id % 2 = 0`` training split) runs after the
+parse rather than at the scan.
 
 Registered queries:
 - ``extract_html_text`` [oracle] — wraps every ``documents.text`` in a
@@ -45,6 +52,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from event_pipeline_spark.operators.udf import once_per_row
 
 QUERIES = {}
 ORACLES = {}
@@ -201,8 +210,12 @@ def extract_html_text(
     max_link_density: float = 0.33,
 ) -> Column:
     """Column of extracted main text (see module docstring for the
-    heuristics). NULL html -> NULL out; no extractable content -> ''."""
+    heuristics). NULL html -> NULL out; no extractable content -> ''.
 
+    Marked ``once_per_row``, so a filter on the result leaves one parse
+    per row in each stage that reads it (module docstring)."""
+
+    @once_per_row
     @pandas_udf("string")
     def _extract(s: pd.Series) -> pd.Series:
         return s.map(

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from event_pipeline_spark.operators.udf import once_per_row
+
 QUERIES = {}
 ORACLES = {}
 
@@ -141,6 +143,7 @@ _HASHERS = {"dhash": dhash64, "phash": phash64}
 
 
 def _hash_images(df, hasher, out_name, id_col, payload_col, fmt_col):
+    @once_per_row
     @pandas_udf("long")
     def _h(payload: pd.Series, fmt: pd.Series) -> pd.Series:
         return pd.Series(

@@ -440,7 +440,14 @@ def _kn_pair_table(train: DataFrame, *, text_col: str) -> DataFrame:
     as separate columns (KN needs per-side marginals, so the joined
     gram-string form of ``_gram_count_table`` is the wrong shape).
     One JVM pass: pairs are built inside the bound token array, the
-    shuffle carries (v, w, partial-count) — never documents."""
+    shuffle carries (v, w, partial-count) — never documents.
+
+    The IS NOT NULL on both words drops nothing (split tokens are never
+    NULL). It repeats the filter Catalyst infers on each consumer's
+    join key, so consumers that read the same columns plan the same
+    subtree and share one shuffle: the pair join with the ``ctx``
+    rollup, and the ``bwd`` rollup with ``lm_kn_perplexity``'s N1+(..)
+    subquery (both read only the keys, so Catalyst prunes the count)."""
     from event_pipeline_spark.operators.text import bind
 
     pairs = bind(
@@ -458,6 +465,7 @@ def _kn_pair_table(train: DataFrame, *, text_col: str) -> DataFrame:
     )
     return (
         train.select(F.inline(pairs))
+        .where(F.col("v").isNotNull() & F.col("w").isNotNull())
         .groupBy("v", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from event_pipeline_spark.operators.udf import once_per_row
+
 QUERIES = {}
 ORACLES = {}
 
@@ -80,6 +82,7 @@ def as_double(a: Column) -> Column:
 
 @_functools.lru_cache(maxsize=1)
 def _cosine_udf():
+    @once_per_row
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
         ma = np.array(a.tolist(), dtype=np.float64)
@@ -146,6 +149,7 @@ def _bucket_udf(n_planes: int, n_tables: int, seed: int, dim: int = DIM):
     planes = rng.normal(size=(dim, n_tables * n_planes))
     weights = (1 << np.arange(n_planes - 1, -1, -1)).astype(np.int64)
 
+    @once_per_row
     @F.pandas_udf("array<long>")
     def bk(vecs: pd.Series) -> pd.Series:
         m = np.array(vecs.tolist(), dtype=np.float64)
@@ -348,6 +352,7 @@ def train_centroids(
 def _assign_udf(centroids: np.ndarray, n_probe: int):
     cT = centroids.T  # (d, k)
 
+    @once_per_row
     @F.pandas_udf("array<int>")
     def assign(vecs: pd.Series) -> pd.Series:
         m = np.array(vecs.tolist(), dtype=np.float64)

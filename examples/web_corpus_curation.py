@@ -8,7 +8,10 @@ pins that they COMPOSE (schemas line up, one DataFrame comes out):
 
 - **Extract**: HTML → main text (jusText/readability density
   heuristics, Arrow-batched; `operators/extract.py`) — the synthetic
-  "crawl" wraps documents.text in a deterministic boilerplate shell;
+  "crawl" wraps documents.text in a deterministic boilerplate shell.
+  Each stage that reads ``extracted`` parses every page once: the
+  extractor is marked ``once_per_row``, so the ``length(text) > 0``
+  filter stays above it instead of forcing a second parse below;
 - **Perplexity-filter**: stupid-backoff trigram LM trained on half the
   corpus scores every extracted doc (`operators/lm.py`); keep docs
   under a perplexity ceiling (CCNet keeps the fluent head);

@@ -20,7 +20,12 @@ from event_pipeline_spark.session import read_table
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return read_table(spark, sf_dir, "documents").cache()
+    # unpersisted at teardown: a cache of the session-shared table left
+    # behind changes every later module's plans (AQE reuses no exchange
+    # above a table-cache stage)
+    df = read_table(spark, sf_dir, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 def brute_force_jaccard_pairs(docs, threshold):

@@ -108,6 +108,26 @@ def test_spark_plan_is_arrow_batched(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
+def test_extractor_runs_once_under_a_filter_on_its_output(spark, sf_dir):
+    """A filter on the extracted text stays above the extraction: the
+    plan parses each page once, not once under the filter and again
+    for the projected column (see ``operators/udf.py``)."""
+    from pyspark.sql import functions as F
+
+    from event_pipeline_spark.session import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+    crawl = docs.select(
+        "doc_id",
+        ex.wrap_in_boilerplate(F.col("text"), F.col("doc_id")).alias("html"),
+    )
+    df = crawl.select(
+        "doc_id", ex.extract_html_text(F.col("html")).alias("text")
+    ).where(F.length("text") > 0)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_unclosed_head_does_not_swallow_body():
     body = "real content that should absolutely survive extraction here"
     html = f"<html><head><title>t</title><body><p>{body}</p></html>"

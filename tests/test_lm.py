@@ -156,10 +156,10 @@ def test_training_grams_are_shuffled_once(spark, sf_dir, tmp_path):
     gram explode, and the five lookups and the token-total subquery
     read it as ReusedExchange.
 
-    The query reads a copy of the documents table: other test modules
-    cache the shared table for the session, and over a cached source
-    AQE plans one table-cache stage per consumer and reuses no exchange
-    above them."""
+    The query reads a private copy of the documents table: over a
+    cached source AQE plans one table-cache stage per consumer and
+    reuses no exchange above them, so a cache of the shared table left
+    by another module would change the plan."""
     shutil.copy(os.path.join(sf_dir, "documents.parquet"), tmp_path)
     df = lm.q_lm_score_positions(spark, str(tmp_path))
     df.collect()
@@ -323,6 +323,28 @@ def test_kn_no_python_in_plan(spark, corpora):
         .toString()
     )
     assert "EvalPython" not in plan
+
+
+@pytest.mark.parametrize(
+    "query, reused",
+    [("q_lm_kn_components", 1), ("q_lm_kn_perplexity", 2)],
+)
+def test_kn_pairs_share_shuffles(spark, sf_dir, tmp_path, query, reused):
+    """The pair table's consumers read two shuffles of the pair explode,
+    not one each: the pair join shares one with the ``ctx`` rollup, and
+    the keys-only ``bwd`` rollup shares the other with the N1+(..)
+    subquery. The documents copy is the one
+    ``test_training_grams_are_shuffled_once`` explains."""
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), tmp_path)
+    df = getattr(lm, query)(spark, str(tmp_path))
+    df.collect()
+    final = _final_plan(df._jdf.queryExecution().executedPlan().toString())
+    pair_explodes = [
+        ln for ln in final.splitlines()
+        if "Generate inline(" in ln and "sequence(2" in ln
+    ]
+    assert len(pair_explodes) == 2, final
+    assert final.count("ReusedExchange") == reused, final
 
 
 def test_good_turing_hand_case(spark):

@@ -16,7 +16,9 @@ from event_pipeline_spark.operators.multimodal import (
 
 @pytest.fixture(scope="module")
 def media(spark, sf_dir):
-    return documents_as_binary(spark, sf_dir).cache()
+    df = documents_as_binary(spark, sf_dir).cache()
+    yield df
+    df.unpersist()
 
 
 def test_binary_payload_roundtrip(media, spark, sf_dir):

@@ -16,7 +16,10 @@ from event_pipeline_spark.session import read_table
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return read_table(spark, sf_dir, "embeddings").cache()
+    # unpersisted at teardown, as in tests/test_dedup.py
+    df = read_table(spark, sf_dir, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

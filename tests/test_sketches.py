@@ -18,7 +18,10 @@ from event_pipeline_spark.session import read_table
 
 @pytest.fixture(scope="module")
 def events(spark, sf_dir):
-    return read_table(spark, sf_dir, "events").cache()
+    # unpersisted at teardown, as in tests/test_dedup.py
+    df = read_table(spark, sf_dir, "events").cache()
+    yield df
+    df.unpersist()
 
 
 def test_hll_estimates_within_rsd(spark, sf_dir, events):
@@ -124,7 +127,10 @@ def test_kll_merge_across_groups(events):
 
 @pytest.fixture(scope="module")
 def orders(spark, sf_dir):
-    return read_table(spark, sf_dir, "orders").cache()
+    # unpersisted at teardown, as in tests/test_dedup.py
+    df = read_table(spark, sf_dir, "orders").cache()
+    yield df
+    df.unpersist()
 
 
 def _exact_overlap(orders):

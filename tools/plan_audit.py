@@ -11,7 +11,12 @@ patterns that kill 100 TB runs:
   task (allowed for final one-row aggregates and the documented
   bounded-result windows);
 - ``BatchEvalPython`` — row-at-a-time (non-Arrow) Python UDFs; the
-  Arrow forms (``ArrowEvalPython``/``MapInPandas``/...) are fine.
+  Arrow forms (``ArrowEvalPython``/``MapInPandas``/...) are fine;
+- a Python UDF evaluated twice in one chain — a Python-eval node with
+  a descendant, below it through single-child nodes, that evaluates
+  the same call (expression ids stripped). Catalyst copies a
+  deterministic UDF under a filter on its output; see
+  ``event_pipeline_spark/operators/udf.py``.
 
 Usage: python tools/plan_audit.py [sf_dir]
 Exit code = number of UNEXPLAINED violations. The test suite pins the
@@ -20,6 +25,7 @@ audit green (tests/test_plan_audit.py).
 
 from __future__ import annotations
 
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -242,6 +248,54 @@ GENERIC_SINGLE_PARTITION_OK = (
 )
 
 
+_PY_EVAL = re.compile(r"^(?:ArrowEvalPython|BatchEvalPython) \[(.*?)\], \[")
+_EXPR_ID = re.compile(r"#\d+L?")
+
+
+def _tree(plan: str) -> tuple[list[str], list[list[int]]]:
+    """(node text, child indices) per line of a plan tree string. A
+    node's depth is the column its text starts at after the ``+- `` /
+    ``:- `` connectors; its parent is the nearest line above it that
+    starts further left."""
+    nodes: list[str] = []
+    children: list[list[int]] = []
+    stack: list[tuple[int, int]] = []  # (column, node index) of the open path
+    for line in plan.splitlines():
+        text = line.lstrip(" :|+-")
+        if not text:
+            continue
+        col = len(line) - len(text)
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        if stack:
+            children[stack[-1][1]].append(len(nodes))
+        stack.append((col, len(nodes)))
+        nodes.append(text)
+        children.append([])
+    return nodes, children
+
+
+def duplicated_python_evals(plan: str) -> list[str]:
+    """Python UDF calls evaluated twice in one chain: a Python-eval node
+    whose descendant, reached through single-child nodes, evaluates the
+    same call with expression ids stripped."""
+    nodes, children = _tree(plan)
+    calls = [
+        (m := _PY_EVAL.match(t)) and _EXPR_ID.sub("", m.group(1)) for t in nodes
+    ]
+    out = []
+    for i, call in enumerate(calls):
+        if not call:
+            continue
+        j = i
+        while len(children[j]) == 1:
+            j = children[j][0]
+            if calls[j] == call:
+                out.append(call)
+                break
+    return out
+
+
 def audit_plan(name: str, plan: str) -> list[tuple[str, str]]:
     """Return [(pattern, detail)] violations for one plan string."""
     out = []
@@ -252,6 +306,8 @@ def audit_plan(name: str, plan: str) -> list[tuple[str, str]]:
         out.append(("BroadcastNestedLoopJoin", "missed equi-join?"))
     if "BatchEvalPython" in plan:
         out.append(("BatchEvalPython", "row-at-a-time Python UDF"))
+    for call in duplicated_python_evals(plan):
+        out.append(("duplicated Python UDF", f"{call} evaluated twice in one chain"))
     if (
         "Exchange SinglePartition" in plan
         and "Exchange SinglePartition" not in allowed
@@ -259,8 +315,6 @@ def audit_plan(name: str, plan: str) -> list[tuple[str, str]]:
         # tolerate the constant-size one-row-aggregate shape: a final
         # HashAggregate directly above the single-partition exchange
         # with no grouping keys
-        import re
-
         spots = [
             m.start() for m in re.finditer("Exchange SinglePartition", plan)
         ]
