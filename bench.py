@@ -40,6 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from event_pipeline_spark.registry import all_queries
 from event_pipeline_spark.session import get_session
+from event_pipeline_spark.testing.faults import drop_all_shuffle_outputs
 
 #: Headline set: the flagship aggregation, joins, windows, dedup, text.
 HEADLINE = [
@@ -99,7 +100,7 @@ def _bench_plan_overrides():
 
     graph_kcore's registered form uses checkpoint_every=2, and
     localCheckpoint is EAGER: peeling rounds 1-4 execute and persist at
-    plan-BUILD time, and ``_drop_all_shuffle_outputs`` cannot
+    plan-BUILD time, and ``drop_all_shuffle_outputs`` cannot
     invalidate checkpointed RDD blocks — timing that plan measures only
     round 5 + the final aggregate (the exact stage-reuse under-report
     the round-9 rework eliminated). The bench therefore times a
@@ -166,72 +167,6 @@ def _static_clone(spark, plan):
     return out
 
 
-def _persistent_rdd_ids(spark) -> list[int]:
-    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = m.keysIterator()
-    ids = []
-    while it.hasNext():
-        ids.append(it.next())
-    return ids
-
-
-def _evict_cached_blocks(spark, keep_ids=()) -> None:
-    """Remove the cached BLOCKS of every persisted RDD except
-    ``keep_ids`` — storage levels stay set, so the next execution
-    recomputes each persisted subtree once and re-caches it (exactly
-    the production cost of a ``pin()``).
-
-    Round-11 measurement fix, the cached-block sibling of
-    ``_drop_all_shuffle_outputs``: operators that pin() a shared
-    subtree materialize it during the WARM pass, so timed samples were
-    reading those blocks for free and excluding the pinned subtree's
-    compute from the steady-state number (measured: fp_winnow_pairs
-    0.47s warm-pin vs 1.8s with blocks evicted — the same
-    stage-reuse under-report class the round-9 shuffle rework
-    eliminated). ``keep_ids`` exempts fixtures deliberately
-    materialized OUTSIDE the timed region (the triangle base edges).
-
-    Checkpointed RDDs are skipped (r12, ADVICE fix): a checkpointed /
-    locally-checkpointed RDD has TRUNCATED lineage — evicting its
-    blocks would make re-execution impossible ("checkpoint block not
-    found"), not force a recompute. No timed plan checkpoints today
-    (the kcore bench form sets checkpoint_every=0), so this changes no
-    current number; it is the guard that keeps a future checkpointing
-    entry from crashing the bench."""
-    sc = spark.sparkContext._jsc.sc()
-    bmm = sc.env().blockManager().master()
-    keep = set(keep_ids)
-    m = sc.getPersistentRDDs()
-    it = m.iterator()
-    while it.hasNext():
-        kv = it.next()
-        rid, rdd = kv._1(), kv._2()
-        if rid in keep:
-            continue
-        if rdd.isCheckpointed() or rdd.isLocallyCheckpointed():
-            continue
-        bmm.removeRdd(rid, True)
-
-
-def _drop_all_shuffle_outputs(spark) -> None:
-    """Unregister EVERY registered shuffle so a re-execution recomputes
-    all stages. The former fixed range(4096) loop silently missed
-    shuffles once a long bench session's shuffle ids grew past 4096 —
-    late entries then timed a run that REUSED the warm pass's shuffle
-    outputs (skipped stages) and under-reported by up to ~7x (caught
-    round 9 when eval_rouge_pairs benched 3.6s against a 12s honest
-    re-execution). Enumerating the MapOutputTracker's live ids is exact
-    at any session age, and cheaper: only real shuffles clean."""
-    sc = spark.sparkContext._jsc.sc()
-    cleaner = sc.cleaner().get()
-    it = sc.env().mapOutputTracker().shuffleStatuses().keySet().iterator()
-    ids = []
-    while it.hasNext():
-        ids.append(it.next())
-    for shuffle_id in ids:
-        cleaner.doCleanupShuffle(shuffle_id, True)
-
-
 def _noop_write(plan) -> None:
     """Execute ``plan`` against the built-in noop sink: every stage
     computes, no row leaves the executors (guide §1.4 — time the
@@ -239,12 +174,11 @@ def _noop_write(plan) -> None:
     plan.write.format("noop").mode("overwrite").save()
 
 
-def _time_once(spark, plan, keep_rdd_ids=()) -> float:
+def _time_once(spark, plan) -> float:
     """Reuse-proof steady-state timing of ``plan`` for the SCALE
     section: noop-sink execution under AQE-off, shuffle outputs dropped
-    and cached pin blocks evicted before EACH sample, min of
-    ``SPARK_GRAFT_BENCH_SCALE_SAMPLES`` (default 2) samples, releasing
-    operator-internal pins after.
+    before EACH sample, min of ``SPARK_GRAFT_BENCH_SCALE_SAMPLES``
+    (default 2) samples.
 
     Two r11 measurement fixes live here (both guide §1.4 — the scale
     fixtures produce output PROPORTIONAL to the multiplier by design,
@@ -267,18 +201,8 @@ def _time_once(spark, plan, keep_rdd_ids=()) -> float:
       caching is measured (the _static_clone rationale).
 
     Min-of-2 rejects residual OS noise without hiding work — every
-    sample recomputes every stage (shuffle drop + block eviction + the
-    fresh QueryExecution).
-
-    Scale-section entries call operators DIRECTLY (not through the
-    registry wrapper that auto-releases at the next query's entry), so
-    operator-internal pin()s would otherwise accumulate across an
-    entry — releasing after each timed execution is safe because the
-    pins belong to already-materialized plans here. ``keep_rdd_ids``
-    exempts fixture data deliberately materialized outside the timed
-    region (see _evict_cached_blocks)."""
-    from event_pipeline_spark.cache import release_pins
-
+    sample recomputes every stage (shuffle drop + the fresh
+    QueryExecution)."""
     samples = max(
         1, int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_SAMPLES", "2"))
     )
@@ -288,16 +212,13 @@ def _time_once(spark, plan, keep_rdd_ids=()) -> float:
         _noop_write(plan)  # warm: codegen compile + JIT, static plan
         best = float("inf")
         for _ in range(samples):
-            _drop_all_shuffle_outputs(spark)
-            _evict_cached_blocks(spark, keep_rdd_ids)
+            drop_all_shuffle_outputs(spark)
             t0 = time.perf_counter()
             _noop_write(plan)
             best = min(best, time.perf_counter() - t0)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prior)
-    out = round(best, 4)
-    release_pins()
-    return out
+    return round(best, 4)
 
 
 def _cust_at(spark, sf_dir: str, m: int):
@@ -483,13 +404,6 @@ def _scale_minhash_hot_bucket(spark, sf_dir: str, mult: int) -> dict:
         ).alias("text"),
     )
     dirty = docs.select("doc_id", "text").unionByName(flood)
-    # Build + time each plan COMPLETELY before building the next (r12,
-    # ADVICE fix): _time_once ends with release_pins(), which would
-    # unpersist a co-existing plan's pinned pair frame — the capped
-    # entry then recomputed its signature pass per consumer while the
-    # uncapped entry kept within-sample pin reuse (asymmetric; biased
-    # the reported cap speedup DOWNWARD — conservative, but skewed:
-    # r11 recorded speedup 2.35 under the asymmetry).
     uncapped_plan = minhash_candidate_pairs(dirty)
     u_pairs = uncapped_plan.count()
     ut = _time_once(spark, uncapped_plan)
@@ -604,12 +518,7 @@ def _triangle_base_edges(spark, sf_dir: str):
         .persist()
     )
     n = base_edges.count()  # materialize before any timing starts
-    # snapshot the fixture's cached-RDD ids: in the entry's fresh
-    # subprocess session this is the only persisted data, and the
-    # timed runs must NOT evict it (it is deliberately outside the
-    # timed region)
-    keep_ids = tuple(_persistent_rdd_ids(base_edges.sparkSession))
-    return base_edges, n, keep_ids
+    return base_edges, n
 
 
 def _scale_triangles(spark, sf_dir: str, mult: int) -> dict:
@@ -627,7 +536,7 @@ def _scale_triangles(spark, sf_dir: str, mult: int) -> dict:
     from event_pipeline_spark.operators.graphrank import triangle_stats
 
     tri_mult = min(mult, 3)
-    base_edges, _, keep_ids = _triangle_base_edges(spark, sf_dir)
+    base_edges, _ = _triangle_base_edges(spark, sf_dir)
 
     def edges_at(m: int):
         parts = [
@@ -642,8 +551,8 @@ def _scale_triangles(spark, sf_dir: str, mult: int) -> dict:
             d = d.unionByName(pt)
         return d
 
-    t1 = _time_once(spark, triangle_stats(edges_at(1)), keep_ids)
-    tm = _time_once(spark, triangle_stats(edges_at(tri_mult)), keep_ids)
+    t1 = _time_once(spark, triangle_stats(edges_at(1)))
+    tm = _time_once(spark, triangle_stats(edges_at(tri_mult)))
     base_edges.unpersist()
     return {
         "mult": tri_mult,
@@ -664,7 +573,7 @@ def _scale_triangles_skewed_hub(spark, sf_dir: str, mult: int) -> dict:
     from event_pipeline_spark.operators.graphrank import triangle_stats
 
     tri_mult = min(mult, 3)
-    base_edges, n_base, keep_ids = _triangle_base_edges(spark, sf_dir)
+    base_edges, n_base = _triangle_base_edges(spark, sf_dir)
     # hub share = h/(E+h) ≈ 30% -> h = (3/7)E; spokes are NEW nodes
     # (degree 1) so the stress is the hub's degree itself, not extra
     # triangle structure
@@ -691,8 +600,8 @@ def _scale_triangles_skewed_hub(spark, sf_dir: str, mult: int) -> dict:
             d = d.unionByName(pt)
         return d
 
-    s1 = _time_once(spark, triangle_stats(skewed_at(1)), keep_ids)
-    sm = _time_once(spark, triangle_stats(skewed_at(tri_mult)), keep_ids)
+    s1 = _time_once(spark, triangle_stats(skewed_at(1)))
+    sm = _time_once(spark, triangle_stats(skewed_at(tri_mult)))
     base_edges.unpersist()
     return {
         "mult": tri_mult, "hub_degree": hub_deg,
@@ -730,7 +639,7 @@ def _scale_section(spark, sf_dir: str) -> dict:
     contamination-prone — entries run after several prior 10× fixtures
     measured up to 4× slower than the same plan in a fresh session
     (residue: un-destroyed broadcast variables from earlier warms plus
-    JVM old-gen/GC pressure; pin-release and clearCache touch neither).
+    JVM old-gen/GC pressure; clearCache touches neither).
     The recorded interval_join ratio inflated from ~10 (its honest
     linear value, fresh) to 19-50 in-section. Per-entry subprocesses
     give every x1/xN pair an identical, residue-free JVM; each entry
@@ -815,9 +724,6 @@ def main() -> None:
     # steady-state pass (headline): re-execute the prepared plans.
     # Shuffle outputs are dropped first so every stage recomputes —
     # re-execution skips only plan compile, never work.
-    def _drop_shuffle_outputs() -> None:
-        _drop_all_shuffle_outputs(spark)
-
     # N timed executions (default 3): every run still recomputes all
     # stages (shuffle outputs dropped first). The headline keeps the min
     # (rejects OS-level noise — same treatment the DuckDB baseline below
@@ -830,10 +736,7 @@ def main() -> None:
         timed = _static_clone(spark, plan)  # warmed; reuse-proof
         out = []
         for _ in range(runs):
-            _drop_shuffle_outputs()
-            # r11: also evict pinned-subtree blocks so each sample pays
-            # every pin's compute once (see _evict_cached_blocks)
-            _evict_cached_blocks(spark)
+            drop_all_shuffle_outputs(spark)
             t0 = time.perf_counter()
             timed.toPandas()
             out.append(time.perf_counter() - t0)

@@ -462,40 +462,53 @@ def materialize_sequences(
 
     Returns ``(seq_id, n, ids)`` — ``ids`` the space-joined token-id
     string of the sequence (exact integers; the last sequence may be
-    partial). Pipeline: tokenize once (Arrow UDF, pinned — three
-    consumers), derive the bounded vocab, map tokens→ids as a literal
-    map expression (production: broadcast-join a frozen vocab table),
-    reuse the distributed prefix-sum packer for the segment layout,
-    then slice each doc's id array per segment and flatten per
-    sequence — everything after the tokenizer is JVM expressions, and
-    no shuffle ever carries more than (seq_id, segment) rows.
+    partial). Pipeline: tokenize once (Arrow UDF) behind one exchange
+    keyed on the doc id, which the vocabulary, the packer and the slice
+    join all read; derive the bounded vocab in the plan and broadcast
+    it as one map row (production: broadcast-join a frozen vocab
+    table); reuse the distributed prefix-sum packer for the segment
+    layout, then slice each doc's id array per segment and flatten per
+    sequence — everything after the tokenizer is JVM expressions, the
+    build starts no Spark job, and no shuffle ever carries more than
+    (seq_id, segment) rows.
     """
-    from event_pipeline_spark.cache import pin
     from event_pipeline_spark.operators.packing import pack_sequences
 
-    toks = pin(apply_bpe(df, text_col, merges, id_col=id_col))
-    vocab = token_vocab(toks)
-    mapping = F.create_map(
-        *[F.lit(x) for tok_id, tok in enumerate(vocab) for x in (tok, tok_id)]
+    # the packer, the slice join and the vocabulary read the same
+    # columns under the same filters (the ones they would infer: a doc
+    # without tokens is in no sequence), so all three read one exchange
+    # and the tokenizer runs once per doc
+    toks = (
+        apply_bpe(df, text_col, merges, id_col=id_col)
+        .select("id", "tokens")
+        .where(
+            F.col("id").isNotNull()
+            & F.col("tokens").isNotNull()
+            & (F.size("tokens") > 0)
+        )
+        .repartition("id")
     )
-    from event_pipeline_spark.operators.text import bind
-
-    # bind(): the 2|V|-literal CreateMap would otherwise be rebuilt for
-    # EVERY token element (no CSE across lambda scopes; see text.bind)
-    with_ids = toks.select(
+    # token id = rank in the sorted distinct vocabulary, one broadcast
+    # row bounded by the tokenizer, not the corpus (see token_vocab)
+    vocab = toks.select(F.explode("tokens").alias("tok")).agg(
+        F.map_from_entries(
+            F.transform(
+                F.array_sort(F.collect_set("tok")), lambda t, i: F.struct(t, i)
+            )
+        ).alias("_vocab")
+    )
+    with_ids = toks.crossJoin(F.broadcast(vocab)).select(
         F.col("id").alias(id_col),
-        F.col("n_tokens"),
-        bind(
-            mapping,
-            lambda m: F.transform(
-                "tokens", lambda t: F.element_at(m, t)
-            ),
+        F.transform(
+            "tokens", lambda t: F.element_at(F.col("_vocab"), t)
         ).alias("_ids"),
     )
     segs = pack_sequences(
-        with_ids.select(id_col, "n_tokens"), id_col=id_col, seq_len=seq_len
+        toks.select(F.col("id").alias(id_col), F.size("tokens").alias("n_tokens")),
+        id_col=id_col,
+        seq_len=seq_len,
     )
-    seg_ids = segs.join(with_ids.select(id_col, "_ids"), id_col).select(
+    seg_ids = segs.join(with_ids, id_col).select(
         "seq_id",
         "seq_off",
         "n",

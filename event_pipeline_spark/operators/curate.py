@@ -15,7 +15,7 @@ contract — the quality gate is a pure map; dedup shuffles (md5 digest,
 doc_id) only; decontamination is a left-anti against the small
 contaminated-id set (benchmark grams broadcast); budget selection uses
 the distributed prefix sum (operators/prefix.py — range partition +
-broadcast offsets, no single-partition window). Catalyst pipelines the
+in-plan offsets, no single-partition window). Catalyst pipelines the
 quality map into the dedup shuffle write, so composing the stages adds
 no extra corpus scans.
 

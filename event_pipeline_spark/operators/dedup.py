@@ -41,7 +41,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from event_pipeline_spark.cache import pin
 from event_pipeline_spark.operators.text import normalized_fingerprint, tokens
 from event_pipeline_spark.operators.udf import once_per_row
 
@@ -104,6 +103,7 @@ def _shingle_set(text: str, k: int) -> "set[str]":
 
 @_functools.lru_cache(maxsize=8)
 def _shingles_udf(k: int):
+    @once_per_row
     @F.pandas_udf("array<string>")
     def sh(texts: pd.Series) -> pd.Series:
         return texts.map(lambda t: sorted(_shingle_set(t, k)))
@@ -360,11 +360,6 @@ def minhash_near_duplicates(
         max_bucket=max_bucket,
         bbit=bbit,
     )
-    # the pair list is consumed three times (both legs of the candidate-id
-    # union + the final join); without pinning it, the whole signature +
-    # banding join recomputes per consumer. Released via
-    # cache.release_pins() after the caller materializes.
-    pairs = pin(pairs)
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
@@ -659,6 +654,55 @@ def _simhash_oracle_sql(max_hamming: int = 3) -> str:
 _register("dedup_simhash_pairs", q_dedup_simhash, _simhash_oracle_sql())
 
 
+def _keyed_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k_shingle: int,
+    group_col: str | None,
+) -> tuple[DataFrame, list[str]]:
+    """(``_id``, [``_grp``], ``_sh``) behind one hash exchange on the
+    keys the verify joins use, and those keys.
+
+    The prefix explode and both verify joins read this frame. They
+    read the same columns under the same filters, so their subtrees
+    match below the exchange and the plan reuses it: the shingle UDF
+    runs once per row per execution, with no cache. The filters are
+    the ones Catalyst would infer on the join sides; a document
+    without shingles is in no pair."""
+    keys = ["_id", "_grp"] if group_col else ["_id"]
+    sh_df = df.select(
+        F.col(id_col).alias("_id"),
+        *([F.col(group_col).alias("_grp")] if group_col else []),
+        shingles(F.col(text_col), k_shingle).alias("_sh"),
+    )
+    present = F.size("_sh") > 0
+    for c in ["_sh", *keys]:
+        present = present & F.col(c).isNotNull()
+    return sh_df.where(present).repartition(*keys), keys
+
+
+def _prefix_len(t: float) -> Column:
+    """How many of its sorted shingles a set must explode so that any
+    partner reaching threshold ``t`` shares one of them."""
+    n = F.size("_sh")
+    return (n - F.ceil(F.lit(t) * n) + 1).cast("int")
+
+
+def _verify_sides(
+    cand: DataFrame, sh_df: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Candidate (id_a, id_b, [_grp]) pairs joined to both shingle
+    sets, ``sh_a`` and ``sh_b``, on the keys ``sh_df`` is partitioned
+    by."""
+    for s in ("a", "b"):
+        side = sh_df.select(
+            F.col("_id").alias(f"id_{s}"), *keys[1:], F.col("_sh").alias(f"sh_{s}")
+        )
+        cand = cand.join(side, [f"id_{s}", *keys[1:]])
+    return cand
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     *,
@@ -680,22 +724,11 @@ def ngram_jaccard_pairs(
     feasible at 100 TB. A naive per-group self-join with the jaccard in
     the condition measured 44-107s at sf0.1; this form runs in ~3s."""
     t = threshold
-    sh_df = df.select(
-        F.col(id_col).alias("_id"),
-        *( [F.col(group_col).alias("_grp")] if group_col else [] ),
-        shingles(F.col(text_col), k_shingle).alias("_sh"),
-    ).withColumn("_n", F.size("_sh"))
-    # materialize once: Catalyst otherwise inlines the shingle UDF into
-    # every consuming expression and re-runs it under the join.
-    # Released via cache.release_pins() after the caller materializes.
-    sh_df = pin(sh_df)
-
-    prefix_len = (F.col("_n") - F.ceil(F.lit(t) * F.col("_n")) + 1).cast("int")
+    sh_df, keys = _keyed_shingles(df, id_col, text_col, k_shingle, group_col)
     pre = sh_df.select(
-        "_id",
-        *( ["_grp"] if group_col else [] ),
-        "_n",
-        F.explode(F.slice("_sh", 1, prefix_len)).alias("_g"),
+        *keys,
+        F.size("_sh").alias("_n"),
+        F.explode(F.slice("_sh", 1, _prefix_len(t))).alias("_g"),
     )
     left, right = pre.alias("l"), pre.alias("r")
     cond = (F.col("l._g") == F.col("r._g")) & (F.col("l._id") < F.col("r._id"))
@@ -706,24 +739,17 @@ def ngram_jaccard_pairs(
         & (F.col("l._n") >= t * F.col("r._n"))
         & (F.col("r._n") >= t * F.col("l._n"))
     )
-    cand = (
-        left.join(right, cond)
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    cand = left.join(right, cond).select(
+        F.col("l._id").alias("id_a"),
+        F.col("r._id").alias("id_b"),
+        *[F.col(f"l.{c}") for c in keys[1:]],
     )
-    verified = (
-        cand.join(
-            sh_df.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh_df.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")),
-            "id_b",
-        )
+    return (
+        _verify_sides(cand.distinct(), sh_df, keys)
         .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
         .where(F.col("jaccard") >= t)
+        .select("id_a", "id_b", "jaccard")
     )
-    return verified.select("id_a", "id_b", "jaccard")
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,10 +809,11 @@ def duplicate_clusters(
     label among its neighbors' labels and its own — a join + an
     aggregate, all DataFrame ops — and converges in O(log n) rounds for
     real dup graphs (label floods a component in diameter hops, and dup
-    components are shallow). ``localCheckpoint`` every few rounds cuts
-    the exponential lineage growth iterative plans otherwise accumulate;
-    convergence is detected with one small count per round (labels that
-    still changed).
+    components are shallow). Each round's labels are a lazy
+    ``localCheckpoint``, materialized by the round's one small count
+    (labels that still changed) that detects convergence: the lineage
+    never grows across rounds, and the returned labels hold no cache
+    entry.
 
     Singleton docs (no pairs) are absent from the output by definition;
     left-join and coalesce with the doc id to canonicalize a full corpus.
@@ -795,11 +822,11 @@ def duplicate_clusters(
     output would silently keep >1 representative per true cluster —
     ``on_nonconverged`` controls the escape: ``"raise"`` (default) or
     ``"warn"`` (log and return the partial labels). Set
-    ``reliable_checkpoint=True`` on long chains on a real cluster to use
-    ``DataFrame.checkpoint()`` (requires
-    ``spark.sparkContext.setCheckpointDir`` — HDFS-persisted, survives
-    executor loss) instead of ``localCheckpoint`` (fast, but pinned to
-    executor storage).
+    ``reliable_checkpoint=True`` on long chains on a real cluster to
+    make every ``checkpoint_every``-th round a ``DataFrame.checkpoint()``
+    (requires ``spark.sparkContext.setCheckpointDir`` — HDFS-persisted,
+    survives executor loss) instead of a ``localCheckpoint`` (fast, but
+    pinned to executor storage).
     """
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged must be raise|warn, not {on_nonconverged!r}")
@@ -815,7 +842,7 @@ def duplicate_clusters(
         edges.groupBy("src")
         .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
         .select(F.col("src").alias("id"), "label")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     for i in range(max_iterations):
         neighbor_min = (
@@ -833,18 +860,11 @@ def duplicate_clusters(
                 (F.col("nbr_label") < F.col("label")).alias("changed"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = (
-                new_labels.checkpoint()
-                if reliable_checkpoint
-                else new_labels.localCheckpoint()
-            )
+        if reliable_checkpoint and (i + 1) % checkpoint_every == 0:
+            labels = new_labels.checkpoint()
         else:
-            new_labels = new_labels.persist()
-        changed = new_labels.where(F.col("changed")).limit(1).count()
-        old = labels
-        labels = new_labels.drop("changed")
-        old.unpersist()
+            labels = new_labels.localCheckpoint(eager=False)
+        changed = labels.where(F.col("changed")).limit(1).count()
         if changed == 0:
             break
     else:
@@ -859,11 +879,6 @@ def duplicate_clusters(
             raise RuntimeError(msg)
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
     edges.unpersist()
-    from event_pipeline_spark.cache import track
-
-    # labels leaves the loop persisted (or localCheckpointed); register
-    # it so release_pins() reclaims it once the caller materializes
-    track(labels)
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 
@@ -1193,23 +1208,14 @@ def containment_pairs(
     ``|A| - ceil(t*|A|) + 1`` prefix, and the full index cannot miss it.
     """
     t = threshold
-    sh_df = df.select(
-        F.col(id_col).alias("_id"),
-        *([F.col(group_col).alias("_grp")] if group_col else []),
-        shingles(F.col(text_col), k_shingle).alias("_sh"),
-    ).withColumn("_n", F.size("_sh"))
-    sh_df = pin(sh_df)
-
-    prefix_len = (F.col("_n") - F.ceil(F.lit(t) * F.col("_n")) + 1).cast(
-        "int"
-    )
-    grp_cols = ["_grp"] if group_col else []
+    sh_df, keys = _keyed_shingles(df, id_col, text_col, k_shingle, group_col)
     pre = sh_df.select(
-        "_id", *grp_cols, "_n",
-        F.explode(F.slice("_sh", 1, prefix_len)).alias("_g"),
+        *keys,
+        F.size("_sh").alias("_n"),
+        F.explode(F.slice("_sh", 1, _prefix_len(t))).alias("_g"),
     )
     full = sh_df.select(
-        "_id", *grp_cols, "_n", F.explode("_sh").alias("_g")
+        *keys, F.size("_sh").alias("_n"), F.explode("_sh").alias("_g")
     )
     left, right = pre.alias("l"), full.alias("r")
     cond = (F.col("l._g") == F.col("r._g")) & (
@@ -1218,32 +1224,19 @@ def containment_pairs(
     )
     if group_col:
         cond = cond & (F.col("l._grp") == F.col("r._grp"))
-    cand = (
-        left.join(right, cond)
-        .select(
-            F.least("l._id", "r._id").alias("id_a"),
-            F.greatest("l._id", "r._id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = left.join(right, cond).select(
+        F.least("l._id", "r._id").alias("id_a"),
+        F.greatest("l._id", "r._id").alias("id_b"),
+        *[F.col(f"l.{c}") for c in keys[1:]],
     )
-    verified = (
-        cand.join(
-            sh_df.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh_df.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.least(F.size("sh_a"), F.size("sh_b")),
-                6,
-            ).alias("containment"),
-        )
+    verified = _verify_sides(cand.distinct(), sh_df, keys).select(
+        "id_a",
+        "id_b",
+        F.round(
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+            / F.least(F.size("sh_a"), F.size("sh_b")),
+            6,
+        ).alias("containment"),
     )
     return verified.where(F.col("containment") >= t)
 

@@ -32,7 +32,6 @@ smoothing, and the per-doc sum from scratch.
 
 from __future__ import annotations
 
-import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,16 +107,15 @@ def dsir_log_weights(
 ) -> DataFrame:
     """(id, n_grams, logw) for every raw doc; higher = more
     target-like. Smoothing is add-one over ``num_buckets``."""
-    from event_pipeline_spark.cache import pin
-
-    spark = raw.sparkSession
-    # pin: each counts frame (<= num_buckets rows) is consumed twice —
-    # an eager total and the ratio join; without the pin every consumer
-    # re-runs the full gram-bucket scan of its corpus (5 scans -> 3).
-    t_counts = pin(_bucket_counts(target, text_col, num_buckets))
-    r_counts = pin(_bucket_counts(raw, text_col, num_buckets))
-    t_total = t_counts.agg(F.sum("cnt")).first()[0] or 0
-    r_total = r_counts.agg(F.sum("cnt")).first()[0] or 0
+    t_counts = _bucket_counts(target, text_col, num_buckets)
+    r_counts = _bucket_counts(raw, text_col, num_buckets)
+    # each smoothed denominator is an in-plan scalar over its counts
+    # aggregate, whose exchange the ratio join reuses: one gram-bucket
+    # pass per corpus, and the build starts no job
+    t_den, r_den = (
+        c.agg(F.coalesce(F.sum("cnt"), F.lit(0)) + num_buckets).scalar()
+        for c in (t_counts, r_counts)
+    )
     # one (bucket, log_ratio) table; missing buckets fall back to the
     # smoothed floor computed inline at scoring time
     ratio = (
@@ -126,21 +124,12 @@ def dsir_log_weights(
         .select(
             "bucket",
             (
-                F.log(
-                    (F.coalesce("tc", F.lit(0)) + 1)
-                    / F.lit(float(t_total + num_buckets))
-                )
-                - F.log(
-                    (F.coalesce("rc", F.lit(0)) + 1)
-                    / F.lit(float(r_total + num_buckets))
-                )
+                F.log((F.coalesce("tc", F.lit(0)) + 1) / t_den)
+                - F.log((F.coalesce("rc", F.lit(0)) + 1) / r_den)
             ).alias("lratio"),
         )
     )
-    floor = F.lit(
-        math.log(1.0 / (t_total + num_buckets))
-        - math.log(1.0 / (r_total + num_buckets))
-    )
+    floor = F.log(1.0 / t_den) - F.log(1.0 / r_den)
     pos = raw.select(
         F.col(id_col),
         F.posexplode(

@@ -32,8 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_pipeline_spark.cache import pin
-
 QUERIES = {}
 ORACLES = {}
 
@@ -85,10 +83,7 @@ def frequent_items(
             )
 
     item_type = df.schema[col].dataType.simpleString()
-    # pin: partials feed both the error-bound aggregate and the
-    # item merge; without it the Misra-Gries pass runs once per
-    # consumer. Released via cache.release_pins() after materializing.
-    parts = pin(
+    parts = (
         df.select(F.col(col).alias(col))
         .where(F.col(col).isNotNull())  # null is the count sentinel
         .mapInPandas(partials, schema=f"item {item_type}, cnt long")

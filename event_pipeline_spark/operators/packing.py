@@ -188,7 +188,7 @@ QUERIES["pack_documents"] = _pack_docs
 # sequences and build attention-mask / doc-boundary metadata.
 #
 # Scale shape: the global offsets come from the distributed prefix sum
-# (operators/prefix.py — range partition + broadcast offsets, never a
+# (operators/prefix.py — range partition + in-plan offsets, never a
 # single-partition window); the per-doc explode emits one row per
 # SPANNED sequence (≈ n_tokens/seq_len + 1 rows per doc), so output is
 # linear in corpus tokens. Everything is JVM expressions — exact
@@ -407,7 +407,7 @@ def assign_shards_balanced(
     how a training run gets N balanced input shards without a solver.
 
     Scale shape: the global rank comes from the distributed prefix sum
-    (operators/prefix.py — range partition + broadcast offsets), never
+    (operators/prefix.py — range partition + in-plan offsets), never
     a single-partition window; the shard formula is then a pure map.
     Returns input columns + ``shard``.
     """
@@ -481,7 +481,7 @@ def curriculum_order(
     ``bucket`` + ``seq`` (the 1-based global training position).
 
     Scale shape: both global ranks (difficulty rank, final sequence)
-    come from the distributed prefix sum (range partition + broadcast
+    come from the distributed prefix sum (range partition + in-plan
     offsets — never a single-partition window); the bucket formula
     ``(rank-1)*n_buckets div N`` is a pure map over a one-row
     broadcast count."""

@@ -2,15 +2,22 @@
 
 ``SUM(x) OVER (ORDER BY ...)`` with no PARTITION BY is the classic
 Spark scale trap: an unpartitioned window collapses the whole table
-into ONE task. The distributed form here is the textbook two-phase
-prefix sum:
+into ONE task. The distributed form here is the two-phase prefix sum,
+written as one plan with a single consumer of its one range exchange:
 
 1. range-partition on the order keys (so partition i holds a
    contiguous key range, already globally ordered across partitions),
-2. one tiny aggregate of per-partition totals → the driver computes
-   the ~``num_partitions`` prefix offsets (KBs of data),
-3. a window partitioned BY PARTITION ID (fully parallel) computes the
-   local cumulative sum, plus the broadcast offset.
+2. a window over the partition id gives each row its local cumulative
+   sum and its partition's total; each partition's first row also
+   fans that total out to every later partition id,
+3. a window over the target partition id sums those totals into the
+   row's offset.
+
+Nothing is collected to the driver and nothing is cached, so the
+result is an ordinary lazy plan: when Spark re-plans it (a new
+``select``, lost shuffle outputs, a cleared cache) the range bounds may
+be sampled again, and the offsets move with them, because they are
+computed from the same exchange in the same execution.
 
 Built on it: ``select_token_budget`` — "fill a token budget with the
 best-scoring documents" — orders by (score desc, id) and keeps rows
@@ -29,13 +36,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from event_pipeline_spark.cache import pin
-
 QUERIES = {}
 ORACLES = {}
 
 _PID = "__pid"
 _LOCAL = "__local_run"
+_TOTAL = "__part_total"
+_RN = "__rn"
+_TGT = "__target"
+_OFF = "__off"
 
 
 def running_total(
@@ -51,72 +60,49 @@ def running_total(
 
     ``order_by`` must be a TOTAL order (include a unique tiebreaker) —
     otherwise "the running total at a row" is ill-defined on any
-    engine. Output = input columns + ``out_col``.
+    engine. Output = input columns + ``out_col``. The plan has one
+    range exchange and builds without starting a Spark job.
     """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    # pin: the ranged layout is consumed twice (totals pass + final
-    # pass) and range partitioning samples boundaries — recomputing
-    # could re-sample and re-assign pids after offsets were collected.
-    # Released by cache.release_pins() once the caller materializes.
-    ranged = pin(
-        df.repartitionByRange(n, *order_by).withColumn(
-            _PID, F.spark_partition_id()
-        )
-    )
-    # per-partition totals → driver → broadcast prefix offsets.
-    # len(totals) == n: KB-scale regardless of table size.
-    # coalesce: a partition whose values are all NULL yields SUM=NULL;
-    # NULL rows contribute 0 (SQL SUM semantics — the row is kept, its
-    # value drops out of the running total, same as the window oracle).
-    totals = {
-        r[_PID]: r["t"]
-        for r in ranged.groupBy(_PID)
-        .agg(F.coalesce(F.sum(value_col), F.lit(0)).alias("t"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += totals[pid]
-    w = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn(_LOCAL, F.sum(value_col).over(w))
-    if len(offsets) <= 128:
-        # small partition count: inline literal map, no extra operator
-        offset_col = F.coalesce(
-            F.element_at(
-                F.create_map(
-                    *[
-                        x
-                        for pid, off in offsets.items()
-                        for x in (F.lit(pid), F.lit(off))
-                    ]
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    w = Window.partitionBy(_PID).orderBy(*order_by)
+    v = F.col(value_col)
+    # NULL values contribute 0 to the totals (SQL SUM semantics — the
+    # row is kept, its value drops out of the running total, same as
+    # the window oracle)
+    local = (
+        df.repartitionByRange(n, *order_by)
+        .withColumn(_PID, F.spark_partition_id())
+        .select(
+            "*",
+            F.sum(v)
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            .alias(_LOCAL),
+            F.coalesce(
+                F.sum(v).over(
+                    w.rowsBetween(
+                        Window.unboundedPreceding, Window.unboundedFollowing
+                    )
                 ),
-                F.col(_PID),
-            )
-            if offsets
-            else F.lit(0),
-            F.lit(0),
+                F.lit(0),
+            ).alias(_TOTAL),
+            F.row_number().over(w).alias(_RN),
         )
-        summed = local.withColumn(
-            out_col, (F.col(_LOCAL) + offset_col).cast("bigint")
-        )
-    else:
-        # thousands of partitions: a giant literal map bloats codegen;
-        # broadcast-join the (pid, offset) table instead
-        offsets_df = spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()],
-            f"{_PID} int, __off long",
-        )
-        summed = local.join(F.broadcast(offsets_df), _PID, "left").withColumn(
+    )
+    # every row targets its own partition; a partition's first row
+    # also targets each later partition, carrying its total there
+    last = F.when(F.col(_RN) == 1, F.lit(n - 1)).otherwise(F.col(_PID))
+    fanned = local.withColumn(_TGT, F.explode(F.sequence(F.col(_PID), last)))
+    own = F.col(_TGT) == F.col(_PID)
+    offset = F.sum(F.when(~own, F.col(_TOTAL))).over(Window.partitionBy(_TGT))
+    return (
+        fanned.withColumn(_OFF, offset)
+        .where(own)
+        .withColumn(
             out_col,
-            (F.col(_LOCAL) + F.coalesce("__off", F.lit(0))).cast("bigint"),
-        ).drop("__off")
-    return summed.drop(_PID, _LOCAL)
+            (F.col(_LOCAL) + F.coalesce(F.col(_OFF), F.lit(0))).cast("bigint"),
+        )
+        .drop(_PID, _LOCAL, _TOTAL, _RN, _TGT, _OFF)
+    )
 
 
 def select_token_budget(

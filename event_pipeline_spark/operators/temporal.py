@@ -1328,9 +1328,7 @@ def markov_kstep_distribution(
     seq = base.withColumn("rk", F.row_number().over(w)).withColumn(
         "nxt", F.lead("s").over(w)
     )
-    from event_pipeline_spark.cache import pin
-
-    trans = pin(
+    trans = (
         seq.where(F.col("nxt").isNotNull())
         .groupBy(F.col("s"), F.col("nxt"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))

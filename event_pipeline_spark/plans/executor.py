@@ -24,9 +24,8 @@ only (a) evaluation of row-level error columns when an event opts in
 terminal sink does. That is not a laziness guarantee: an operator may
 start Spark jobs while it builds its plan, and those run inside
 ``process()``. On the web-curation path ``semantic_dedup``'s trainer
-starts 3 and ``select_token_budget``'s prefix offsets start the rest
-(``tools/eager_audit.py`` lists every such query; ROADMAP direction 2
-tracks them). At 100 TB the driver walk is O(graph), invariant to data
+starts 3 and no other stage starts one (``tools/eager_audit.py`` lists
+every such query; ROADMAP direction 2 tracks them). At 100 TB the driver walk is O(graph), invariant to data
 size.
 """
 

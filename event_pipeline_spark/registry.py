@@ -186,27 +186,6 @@ GRADE_DEFER_CORE = {
 }
 
 
-def _auto_release(fn: QueryFn) -> QueryFn:
-    """Release the previous query's pinned caches at entry.
-
-    Operators pin recompute-unsafe or expensive intermediates
-    (``cache.pin``) that must survive until the caller materializes the
-    returned plan — so release happens at the NEXT query's entry, which
-    in every driver/bench/differential loop is after the previous
-    collect. Keeps back-to-back registry runs bounded at one query's
-    pins instead of accumulating."""
-    import functools
-
-    from event_pipeline_spark.cache import release_pins
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_pins()
-        return fn(spark, sf_dir)
-
-    return wrapped
-
-
 def _grade_order(qs: dict[str, QueryFn]) -> dict[str, QueryFn]:
     core_first = [
         f"q{i}"
@@ -215,7 +194,7 @@ def _grade_order(qs: dict[str, QueryFn]) -> dict[str, QueryFn]:
     ]
     prefix = core_first + [n for n in GRADE_FIRST_OPERATORS if n in qs]
     rest = [n for n in qs if n not in set(prefix)]
-    return {n: _auto_release(qs[n]) for n in prefix + rest}
+    return {n: qs[n] for n in prefix + rest}
 
 
 def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:

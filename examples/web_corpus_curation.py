@@ -22,12 +22,12 @@ pins that they COMPOSE (schemas line up, one DataFrame comes out):
   budget best-first by (negated) perplexity (`operators/prefix.py`).
 
 Building the plan is not free of Spark jobs. At sf0.01 ``curate()``
-starts 16 jobs before any action: ``semantic_dedup``'s centroid
-trainer starts 3 (a count and a sample collect), and
-``select_token_budget``'s per-partition offsets start the other 13,
-each of which runs the upstream stages. The LM stage starts none (its
-token total is an in-plan scalar). ROADMAP direction 2 tracks moving
-the rest into the plan; ``tools/eager_audit.py`` counts them per query.
+starts 3 jobs before any action, all in ``semantic_dedup``'s centroid
+trainer (a count and a sample collect). The LM stage and the budget
+selection start none: the LM's token total is an in-plan scalar, and
+the prefix sum's offsets are computed in the plan. ROADMAP direction 2
+tracks the trainer; ``tools/eager_audit.py`` counts build-time jobs
+per query.
 
 Run:  python examples/web_corpus_curation.py [sf_dir]
 """

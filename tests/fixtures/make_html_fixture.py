@@ -7,6 +7,8 @@ content, block tags segment, short headings kept above content).
 Run once: python tests/fixtures/make_html_fixture.py
 """
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -107,7 +109,8 @@ def main() -> None:
             "expected_text": pa.array([p[2] for p in PAGES], pa.string()),
         }
     )
-    pq.write_table(t, "/root/repo/tests/fixtures/html_pages.parquet")
+    here = os.path.dirname(os.path.abspath(__file__))
+    pq.write_table(t, os.path.join(here, "html_pages.parquet"))
     print("wrote", len(PAGES), "pages")
 
 

@@ -9,7 +9,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.eager_audit import ALLOWED, audit, unexplained  # noqa: E402
+from test_recompute_safety import RUNNING_TOTAL_QUERIES  # noqa: E402
+from tools.eager_audit import ALLOWED, audit, stale, unexplained  # noqa: E402
 
 from event_pipeline_spark.registry import all_queries  # noqa: E402
 
@@ -23,6 +24,16 @@ def test_lm_queries_build_lazily(spark, sf_dir):
     assert not any(name.startswith("lm_") for name in ALLOWED)
 
 
+def test_running_total_queries_build_lazily(spark, sf_dir):
+    """Every query built on running_total builds with 0 jobs: the
+    offsets are computed in the plan, not collected to the driver."""
+    counts = audit(spark, sf_dir, RUNNING_TOTAL_QUERIES)
+    assert {n: counts[n] for n in RUNNING_TOTAL_QUERIES} == dict.fromkeys(
+        RUNNING_TOTAL_QUERIES, 0
+    )
+    assert not set(RUNNING_TOTAL_QUERIES) & set(ALLOWED)
+
+
 def test_allowances_name_registered_queries_with_reasons():
     qs = all_queries()
     for name, reason in ALLOWED.items():
@@ -32,6 +43,11 @@ def test_allowances_name_registered_queries_with_reasons():
 
 def test_every_eager_build_is_allowed(spark, sf_dir):
     """The whole registry: a query that starts jobs at build time and is
-    not on the allow-list fails here."""
-    bad = unexplained(audit(spark, sf_dir))
+    not on the allow-list fails here, and so does an allowance whose
+    query now builds with 0 jobs (a stale entry is deleted, not
+    carried)."""
+    counts = audit(spark, sf_dir)
+    bad = unexplained(counts)
     assert not bad, f"queries start jobs at build time, not in ALLOWED: {bad}"
+    unneeded = stale(counts)
+    assert not unneeded, f"allowances no longer needed: {unneeded}"

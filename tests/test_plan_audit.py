@@ -1,9 +1,9 @@
 """The automated plan-hygiene gate: every registered query's physical
 plan is free of scale anti-patterns (cartesian products, undocumented
 nested-loop joins, whole-table single-partition funnels, row-at-a-time
-Python UDFs, a Python UDF evaluated twice in one chain). Plans are
-BUILT, never executed — the audit covers the whole registry in one
-session."""
+Python UDFs, a Python UDF evaluated twice in one chain, a cached frame
+read by the plan). Plans are BUILT, never executed — the audit covers
+the whole registry in one session."""
 
 from __future__ import annotations
 
@@ -76,10 +76,19 @@ def test_udf_once_per_join_side_is_clean():
     assert audit_plan("any", JOIN_SIDES) == []
 
 
+def test_cached_frame_is_flagged(spark):
+    df = spark.range(10).persist()
+    try:
+        plan = df.select("id")._jdf.queryExecution().executedPlan().toString()
+    finally:
+        df.unpersist()
+    assert ("InMemoryTableScan", "cached frame read by the plan") in audit_plan(
+        "any", plan
+    )
+
+
 #: Registered queries whose plans evaluated a Python UDF twice in one
-#: chain before their UDFs were marked ``once_per_row``. The full-
-#: registry audit above runs in the slow lane; this pins them in the
-#: default lane.
+#: chain before their UDFs were marked ``once_per_row``.
 @pytest.mark.parametrize(
     "name",
     [

@@ -1,6 +1,6 @@
 """Distributed prefix sum: parity with the single-window form, no
 single-partition exchange in the plan, and budget-selection semantics.
-(The registered queries pin exact values against DuckDB windows.)"""
+(The registered queries check exact values against DuckDB windows.)"""
 
 from __future__ import annotations
 
@@ -32,20 +32,21 @@ def test_running_total_matches_single_window(spark):
         for r in df.withColumn("run", F.sum("v").over(w)).collect()
     }
     assert fast == slow
-    spark.catalog.clearCache()
 
 
 def test_no_single_partition_exchange_in_plan(spark):
     """The point of the operator: the plan range-partitions and windows
-    per partition id — it never funnels the table into one task."""
+    per partition id — it never funnels the table into one task. One
+    range exchange, read once: no second sampling of the bounds can
+    disagree with the first."""
     df = spark.range(10000).select(
         F.col("id").alias("uid"), (F.col("id") % 7).alias("v")
     )
     out = running_total(df, [F.col("uid").asc()], "v")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-    assert "singlepartition" not in plan.lower()
-    spark.catalog.clearCache()
+    plan = out._jdf.queryExecution().executedPlan().toString().lower()
+    assert plan.count("rangepartitioning") == 1
+    assert "singlepartition" not in plan
+    assert "inmemorytablescan" not in plan
 
 
 def test_select_token_budget_keeps_best_first_until_full(spark):
@@ -60,12 +61,11 @@ def test_select_token_budget_keeps_best_first_until_full(spark):
     # best-first: 5 (30) + 1 (70) fit; 2 would hit 110 > 100
     assert {r["doc_id"] for r in kept} == {5, 1}
     assert max(r["running_tokens"] for r in kept) == 70
-    spark.catalog.clearCache()
 
 
-def test_running_total_broadcast_offset_path(spark):
-    """num_partitions > 128 switches the offset delivery from a literal
-    map to a broadcast join — identical totals either way."""
+def test_running_total_is_independent_of_partition_count(spark):
+    """8 or 200 range partitions (more partitions than rows per
+    partition at 200): identical totals either way."""
     df = spark.range(2000).select(
         F.col("id").alias("uid"), (F.col("id") % 5 + 1).alias("v")
     )
@@ -83,7 +83,6 @@ def test_running_total_broadcast_offset_path(spark):
         ).collect()
     }
     assert small == big
-    spark.catalog.clearCache()
 
 
 # -- property differential vs pandas cumsum ----------------------------------
@@ -122,4 +121,3 @@ def test_running_total_property_vs_pandas(spark, vals, keys, parts):
     ordered = pdf.sort_values(["k", "uid"])
     want = dict(zip(ordered["uid"], ordered["v"].cumsum()))
     assert got == want
-    spark.catalog.clearCache()

@@ -5,13 +5,18 @@ the full 64-bit range."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-VENDOR = "/root/repo/event_pipeline_spark/_vendor"
+VENDOR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "event_pipeline_spark",
+    "_vendor",
+)
 if VENDOR not in sys.path:
     sys.path.insert(0, VENDOR)
 

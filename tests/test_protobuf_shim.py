@@ -9,13 +9,18 @@ pin the runtime's semantics in isolation.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
 
 import pytest
 
-VENDOR = "/root/repo/event_pipeline_spark/_vendor"
+VENDOR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "event_pipeline_spark",
+    "_vendor",
+)
 
 
 @pytest.fixture(scope="module", autouse=True)

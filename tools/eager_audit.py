@@ -16,7 +16,7 @@ Usage: python tools/eager_audit.py [sf_dir] [query-prefix ...]
 (sf_dir defaults to ``session.DEFAULT_SF_DIR``, the sf0.001 tables.)
 Prints each audited query's build-time job count and the total. Exit
 code = number of queries that start jobs at build time and are not in
-ALLOWED.
+ALLOWED, plus the number of ALLOWED queries that start none.
 """
 
 from __future__ import annotations
@@ -26,10 +26,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_PREFIX = (
-    "prefix.running_total: per-partition offsets collected to the driver, "
-    "result pinned (range bounds must not be re-sampled on recompute)"
-)
 _CLUSTERS = (
     "dedup.duplicate_clusters: iterative min-label propagation, one "
     "count and checkpoint per round until no label changes"
@@ -44,22 +40,16 @@ ALLOWED: dict[str, str] = {
     "analytics_rfm": "rfm_segments: quintile thresholds collected as literals",
     "basket_rules": "basket_rules: distinct order count for support",
     "bpe_merges": "train_bpe_distributed: one driver round per merge",
-    "curate_funnel": _PREFIX,
-    "curate_pipeline": _PREFIX,
-    "curriculum_order": _PREFIX,
     "decontam_bloom": "bloom_build: filter bits collected and broadcast",
     "dedup_cluster_exact": _CLUSTERS,
-    "dedup_clusters": _CLUSTERS + "; minhash pairs pinned",
+    "dedup_clusters": _CLUSTERS,
     "dedup_keep_best": _CLUSTERS,
-    "dsir_log_weights": "dsir_log_weights: totals read with first(), tables pinned",
-    "dsir_sample": "dsir_log_weights: totals read with first(), tables pinned",
     "extract_html_fixture": _FIXTURE,
     "fuzzy_fs_clusters": _CLUSTERS,
     "graph_kcore": "kcore_members: iterative peeling, localCheckpoint per sweep",
     "langid_fixture_predict": _FIXTURE + "; langid profile scalars collected",
     "langid_predict": "langid._profile_scalars: profile totals collected",
     "langid_score": "langid._profile_scalars: profile totals collected",
-    "materialize_sequences_bpe": "bpe.token_vocab collected; sequences pinned",
     "mm_audio_fingerprint": _FIXTURE,
     "mm_audio_neardup": _FIXTURE,
     "mm_image_clusters": _FIXTURE + "; " + _CLUSTERS,
@@ -68,13 +58,6 @@ ALLOWED: dict[str, str] = {
     "mm_image_neardup_phash": _FIXTURE,
     "mm_image_phash": _FIXTURE,
     "mojibake_fixture": _FIXTURE,
-    "pack_sequences_512": _PREFIX,
-    "pack_sequences_bpe": _PREFIX,
-    "running_total_by_day": _PREFIX,
-    "select_novel_budget": _PREFIX,
-    "select_token_budget": _PREFIX,
-    "select_token_budget_bpe": _PREFIX,
-    "shard_assign": _PREFIX,
     "sim_embedding_drift": "embedding_drift: both frame sizes counted",
     "sim_ivf_topk": _TRAIN,
     "sim_ivfpq_topk": _TRAIN + "; query vector read with first()",
@@ -129,6 +112,12 @@ def unexplained(counts: dict[str, int]) -> list[str]:
     return [n for n, jobs in counts.items() if jobs and n not in ALLOWED]
 
 
+def stale(counts: dict[str, int]) -> list[str]:
+    """Allowed queries that were audited and started no job: their
+    allowance is no longer needed."""
+    return [n for n in ALLOWED if counts.get(n) == 0]
+
+
 def main() -> int:
     from event_pipeline_spark.session import DEFAULT_SF_DIR, get_session
 
@@ -149,9 +138,10 @@ def main() -> int:
         f"\n{sum(eager.values())} build-time jobs in {len(eager)} of "
         f"{len(counts)} queries"
     )
-    bad = unexplained(counts)
+    bad, unneeded = unexplained(counts), stale(counts)
     print(f"{len(bad)} eager queries not in ALLOWED")
-    return len(bad)
+    print(f"{len(unneeded)} allowances no longer needed")
+    return len(bad) + len(unneeded)
 
 
 if __name__ == "__main__":

@@ -16,7 +16,10 @@ patterns that kill 100 TB runs:
   a descendant, below it through single-child nodes, that evaluates
   the same call (expression ids stripped). Catalyst copies a
   deterministic UDF under a filter on its output; see
-  ``event_pipeline_spark/operators/udf.py``.
+  ``event_pipeline_spark/operators/udf.py``;
+- ``InMemoryTableScan`` — a cached frame read by the plan. A plan must
+  give the same answer when Spark recomputes it, so no operator leaves
+  a cache in the plan it returns.
 
 Usage: python tools/plan_audit.py [sf_dir]
 Exit code = number of UNEXPLAINED violations. The test suite pins the
@@ -178,6 +181,11 @@ ALLOWED: dict[str, dict[str, str]] = {
         "BroadcastNestedLoopJoin": "broadcast one-row doc count for the "
         "bucket formula (the rank_bm25 one-row-stats shape)",
     },
+    "materialize_sequences_bpe": {
+        "BroadcastNestedLoopJoin": "broadcast ONE row holding the token "
+        "vocabulary map, bounded by the tokenizer (the rank_bm25 "
+        "one-row-stats shape)",
+    },
     "rank_tfidf_docsim": {
         "BroadcastNestedLoopJoin": "broadcast one-row doc-count for idf "
         "(the rank_bm25 one-row-stats shape)",
@@ -306,6 +314,8 @@ def audit_plan(name: str, plan: str) -> list[tuple[str, str]]:
         out.append(("BroadcastNestedLoopJoin", "missed equi-join?"))
     if "BatchEvalPython" in plan:
         out.append(("BatchEvalPython", "row-at-a-time Python UDF"))
+    if "InMemoryTableScan" in plan:
+        out.append(("InMemoryTableScan", "cached frame read by the plan"))
     for call in duplicated_python_evals(plan):
         out.append(("duplicated Python UDF", f"{call} evaluated twice in one chain"))
     if (
