@@ -5,6 +5,18 @@ Prints ONE JSON line:
   {"metric": "total_query_sec", "value": N, "unit": "sec",
    "queries": {"q1": sec, ...}, "sf": "..."}
 
+Every timed sample is what a caller of the registry pays (``_sample``):
+shuffle outputs are dropped, the query is rebuilt from the registry and
+collected on the session's AQE path. Jobs the build starts, broadcast
+builds and adaptive re-planning all fall inside the sample, and no
+sample reuses a stage of another. ``total_query_sec`` sums each
+headline query's min of ``SPARK_GRAFT_BENCH_RUNS`` samples (their
+median is reported alongside); ``cold_total_sec`` sums each query's
+first build and collect, codegen compile included. The operator shelf
+is timed the same way. Totals recorded before this form timed a
+re-executed AQE-off clone that skipped broadcast builds, and are not
+comparable.
+
 Materialization uses Arrow (``toPandas``) — same rows delivered,
 columnar transfer — so the timing measures the engine, not pyspark's
 row-at-a-time ``collect()`` deserializer (q18 at sf0.1: 0.22s compute
@@ -12,29 +24,16 @@ vs 1.5s legacy-collect of 100k rows). The SCALE section instead times
 noop-sink executions (its fixtures emit output proportional to the
 multiplier, so the sink must stay out of a growth ratio — see
 ``_time_once``).
-
-``total_query_sec`` (the headline) times the *steady-state execution*:
-each query's DataFrame is built and run once (cold pass, production
-AQE plan), then a STATIC (AQE-off) clone of the same analyzed plan is
-re-executed for the timed samples with its shuffle outputs dropped
-first — every stage recomputes, verified by constant completed-task
-counts across samples (round-9 change; the full why lives on
-``_static_clone``: AQE stage-result caching made same-plan
-re-execution silently reuse work, and per-sample AQE re-planning costs
-~0.4s of planner, not engine). Nothing is hidden:
-``cold_total_sec`` reports the full first-run total (build + compile +
-execute) and ``fresh_plan_total_sec`` a fully re-built re-run
-(plan-cache miss), both on the production AQE path. Headline totals
-before round 9 are not directly comparable (the old regime could
-under-report by reusing stages).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -59,7 +58,9 @@ HEADLINE = [
 
 #: LLM-surface operator set, timed separately (own JSON key) so the
 #: headline total stays comparable across rounds while regressions in
-#: the data-pipeline operators remain visible per-round.
+#: the data-pipeline operators remain visible per-round. The iterative,
+#: pair-generating and fan-out shapes are the ones most worth watching
+#: at scale.
 OPERATORS = [
     "rank_bm25_topk",
     "dedup_ngram_jaccard",
@@ -70,155 +71,65 @@ OPERATORS = [
     "resample_ffill_hourly",
     "select_token_budget",
     "shuffle_epoch",
-    # round-7 additions: the new heavyweight families stay measured
     "fp_winnow_pairs",
     "curate_funnel",
     "rank_tfidf_docsim",
-    # round-8 additions: the kernel-flipped substring dedup, the
-    # Viterbi tokenizer, linear-blocked FS linkage, and the iterative
-    # PCA — the new shapes most worth watching at scale
     "dedup_substring_spans",
     "unigram_tokens",
     "fuzzy_fs_linkage",
     "sim_pca_project_exact",
-    # round-9 additions: the iterative k-core peel, the chained ROUGE
-    # pair grading, and the windowed co-occurrence join — the new
-    # shapes most worth watching at scale
     "graph_kcore",
     "eval_rouge_pairs",
     "text_cooccurrence_pmi",
-    # round-10 additions: the 100-replicate bootstrap fan-out and the
-    # corpus-sized novelty gram join — the new shapes most worth
-    # watching at scale
     "stats_bootstrap_ci",
     "decontam_novelty",
 ]
 
 
-def _bench_plan_overrides():
-    """name -> alternate plan builder for TIMED samples only.
-
-    graph_kcore's registered form uses checkpoint_every=2, and
-    localCheckpoint is EAGER: peeling rounds 1-4 execute and persist at
-    plan-BUILD time, and ``drop_all_shuffle_outputs`` cannot
-    invalidate checkpointed RDD blocks — timing that plan measures only
-    round 5 + the final aggregate (the exact stage-reuse under-report
-    the round-9 rework eliminated). The bench therefore times a
-    checkpoint-free build; the differential/gate path keeps
-    checkpoint_every=2 where it only bounds plan depth.
-
-    broadcast_keep=True (r11, re-evidenced r12 for the delta form):
-    the bench's STATIC clone plans from static size estimates, which
-    keep the delta form's node-sized sweep sides SortMergeJoins; the
-    production AQE path broadcasts every one at runtime — COMMITTED
-    EVIDENCE: plans/r12/graph_kcore_ckpt0_executed_aqe.txt, the
-    post-collect() final adaptive plan of this exact hint-free bench
-    form at sf0.1 (0 SortMergeJoin / 15 BroadcastHashJoin / 2 scans).
-    The hint makes the timed static plan match the plan production
-    actually runs — r12 delta form measured 3.97s (unhinted static,
-    SMJ) vs 2.11s (broadcast form) at sf0.1. The REGISTERED query
-    keeps the scale-safe default (no hint): a surviving-node table at
-    extreme scale may not fit executor memory, and there AQE correctly
-    keeps the shuffled join. (Caveat recorded: the registered
-    checkpoint_every=2 form's post-checkpoint sweeps DO run SMJ at
-    runtime — the checkpoint boundary hides the dead side's size from
-    AQE; see plans/r12/graph_kcore_executed_aqe.txt. The bench form is
-    checkpoint-free, where the all-broadcast conversion is total.)"""
-    from event_pipeline_spark.operators.graphrank import q_graph_kcore
-
-    return {
-        "graph_kcore": lambda spark, sf_dir: q_graph_kcore(
-            spark, sf_dir, checkpoint_every=0, broadcast_keep=True
-        ),
-    }
+def _collect(df) -> None:
+    df.toPandas()
 
 
-def _static_clone(spark, plan):
-    """A NEW Dataset over ``plan``'s analyzed plan, physical-planned
-    with AQE DISABLED — the bench's measurable steady-state form.
-
-    Why (round-9 finding): under Spark 4 AQE, re-executing the SAME
-    DataFrame object reuses its materialized query-stage results, and
-    dropping shuffle outputs does not reliably defeat the reuse
-    (measured: a q18 re-execution launching 3 tasks; a triangle scale
-    entry flip-flopping 1.8s/12.6s run to run). Re-planning a fresh
-    AQE Dataset per sample is reuse-proof but pays ~0.4s of adaptive
-    planning per execution — measuring the planner, not the engine.
-    A STATIC (non-AQE) plan has neither problem: it holds no stage
-    cache, so dropping shuffle outputs forces every stage to recompute
-    (verified: constant completed-task counts across timed samples),
-    and it re-executes with zero re-planning. The cost is that timed
-    samples run without AQE's runtime coalescing — the same work in
-    more, smaller tasks — which is the conservative direction for a
-    throughput claim. Cold/fresh passes still run the production AQE
-    path."""
-    from pyspark.sql import DataFrame as _PyDF
-
-    prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        j2 = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, plan._jdf.queryExecution().analyzed()
-        )
-        out = _PyDF(j2, plan.sparkSession)
-        out.toPandas()  # physical-plan + codegen + warm WITH AQE off
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior)
-    return out
-
-
-def _noop_write(plan) -> None:
-    """Execute ``plan`` against the built-in noop sink: every stage
+def _noop_write(df) -> None:
+    """Execute ``df`` against the built-in noop sink: every stage
     computes, no row leaves the executors (guide §1.4 — time the
     computation, not the sink)."""
-    plan.write.format("noop").mode("overwrite").save()
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _sample(spark, build, sink=_collect) -> float:
+    """Seconds to run ``sink(build())`` after dropping every shuffle
+    output: the one timing form of this bench.
+
+    ``build`` is what a caller runs to get the DataFrame (a registry
+    entry over ``sf_dir``), so a sample pays for any job the build
+    starts. The action plans a new QueryExecution on the session's AQE
+    path, so every stage recomputes, broadcast builds included: a
+    re-executed physical plan would keep its broadcast relations and
+    AQE query-stage results from the run before."""
+    drop_all_shuffle_outputs(spark)
+    t0 = time.perf_counter()
+    sink(build())
+    return time.perf_counter() - t0
 
 
 def _time_once(spark, plan) -> float:
-    """Reuse-proof steady-state timing of ``plan`` for the SCALE
-    section: noop-sink execution under AQE-off, shuffle outputs dropped
-    before EACH sample, min of ``SPARK_GRAFT_BENCH_SCALE_SAMPLES``
-    (default 2) samples.
+    """Min of 2 noop-sink samples of ``plan``, after one warm write,
+    for the SCALE section.
 
-    Two r11 measurement fixes live here (both guide §1.4 — the scale
-    fixtures produce output PROPORTIONAL to the multiplier by design,
-    so the sink cost must not be part of a growth ratio):
-
-    - **noop sink, not toPandas**: the 10x interval fixture emits 6M
-      rows; Arrow-collecting ~300 MB to the driver per sample put the
-      measurement at the mercy of driver GC — the same subprocess-fresh
-      entry recorded xN anywhere between 1.7s and 21.4s run to run
-      (bimodal, with every sample in a bad run slow). With the noop
-      sink the same entry's xN samples sit within +-0.2s.
-    - **fresh execution per sample**: each sample is a new write
-      QueryExecution over the analyzed plan (planned statically, AQE
-      off), so per-sample work includes broadcast builds — the prior
-      static-clone form cached BroadcastExchange relation futures
-      across samples, silently excluding every broadcast build (scan +
-      explode + hash-relation construction) from the steady-state
-      number. Static planning costs ~0.1s/sample and is identical at
-      x1 and xN; AQE stays off so no adaptive re-planning or stage
-      caching is measured (the _static_clone rationale).
-
-    Min-of-2 rejects residual OS noise without hiding work — every
-    sample recomputes every stage (shuffle drop + the fresh
-    QueryExecution)."""
-    samples = max(
-        1, int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_SAMPLES", "2"))
+    The scale fixtures produce output PROPORTIONAL to the multiplier by
+    design, so the sink must stay out of a growth ratio (guide §1.4):
+    Arrow-collecting the 10x interval fixture's 6M rows (~300 MB) per
+    sample put the number at the mercy of driver GC (the same entry
+    read 1.7s to 21.4s run to run), while its noop-sink samples sit
+    within +-0.2s. Each write is a new QueryExecution over ``plan``'s
+    analyzed plan, so each sample re-plans and recomputes every stage.
+    The fixtures are built once outside the timed region; the min of 2
+    rejects residual OS noise without hiding work."""
+    _noop_write(plan)  # warm: codegen compile + JIT
+    return round(
+        min(_sample(spark, lambda: plan, _noop_write) for _ in range(2)), 4
     )
-    prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        _noop_write(plan)  # warm: codegen compile + JIT, static plan
-        best = float("inf")
-        for _ in range(samples):
-            drop_all_shuffle_outputs(spark)
-            t0 = time.perf_counter()
-            _noop_write(plan)
-            best = min(best, time.perf_counter() - t0)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior)
-    return round(best, 4)
 
 
 def _cust_at(spark, sf_dir: str, m: int):
@@ -305,8 +216,8 @@ def _scale_jaccard(spark, sf_dir: str, mult: int) -> dict:
 
 
 def _scale_fuzzy_salted(spark, sf_dir: str, mult: int) -> dict:
-    # r5: the salted/sub-blocked fuzzy form must not grow WORSE than the
-    # plain blocked form (VERDICT r4 task 3's acceptance bar).
+    # the salted/sub-blocked fuzzy form must not grow WORSE than the
+    # plain blocked form
     from event_pipeline_spark.operators.fuzzy import fuzzy_pairs
 
     s1 = _time_once(spark, fuzzy_pairs(
@@ -522,15 +433,13 @@ def _triangle_base_edges(spark, sf_dir: str):
 
 
 def _scale_triangles(spark, sf_dir: str, mult: int) -> dict:
-    # r8/r9: triangle counting — growth mode is m× more communities of
-    # the same size (replica-unique node keys over a base edge list
+    # triangle counting — growth mode is m× more communities of the
+    # same size (replica-unique node keys over a base edge list
     # MATERIALIZED outside the timed region), so per-copy work is
     # constant and total work ~m. Triangle work is Θ(Σ deg²) — the
     # sf0.1 co-purchase graph packs 72M wedge-operations per copy, so
     # the multiplier is capped at 3 here (x10 is ~720M merge steps ≈
-    # a minute of honest arithmetic, too heavy for a growth probe; the
-    # r9 operator rewrite to adjacency-array intersection already cut
-    # that scale point 266s -> 62s by never materializing wedges).
+    # a minute of honest arithmetic, too heavy for a growth probe).
     from pyspark.sql import functions as F
 
     from event_pipeline_spark.operators.graphrank import triangle_stats
@@ -561,13 +470,14 @@ def _scale_triangles(spark, sf_dir: str, mult: int) -> dict:
 
 
 def _scale_triangles_skewed_hub(spark, sf_dir: str, mult: int) -> dict:
-    # r10: hub-skewed fixture — a LOW-ID hub (node 0) joined to every
-    # other node, sized so the hub sits in ~30% of edges. Under the old
-    # id-orientation the hub kept its FULL neighbor list and met it on
-    # every hub edge (per-edge intersect work quadratic in hub degree);
-    # degree-ordered orientation points every spoke INTO the hub, so
-    # per-edge arrays stay bounded and growth stays ~linear (checked by
-    # the same replica growth mode: each replica gets its own hub).
+    # hub-skewed fixture — a LOW-ID hub (node 0) joined to every other
+    # node, sized so the hub sits in ~30% of edges. An id-oriented
+    # triangle count would keep the hub's FULL neighbor list and meet
+    # it on every hub edge (per-edge intersect work quadratic in hub
+    # degree); degree-ordered orientation points every spoke INTO the
+    # hub, so per-edge arrays stay bounded and growth stays ~linear
+    # (checked by the same replica growth mode: each replica gets its
+    # own hub).
     from pyspark.sql import functions as F
 
     from event_pipeline_spark.operators.graphrank import triangle_stats
@@ -635,27 +545,19 @@ def _scale_section(spark, sf_dir: str) -> dict:
     """Time the pair/explode-heavy operators at 1× and N× input, EACH
     ENTRY IN A SUBPROCESS-FRESH SESSION.
 
-    Round-11 measurement fix: the former single-session loop was
-    contamination-prone — entries run after several prior 10× fixtures
+    In one shared session, entries run after several 10× fixtures
     measured up to 4× slower than the same plan in a fresh session
     (residue: un-destroyed broadcast variables from earlier warms plus
-    JVM old-gen/GC pressure; clearCache touches neither).
-    The recorded interval_join ratio inflated from ~10 (its honest
-    linear value, fresh) to 19-50 in-section. Per-entry subprocesses
-    give every x1/xN pair an identical, residue-free JVM; each entry
-    still times x1 before xN inside its own session, so the pair shares
-    codegen/JIT warmth exactly as before. ``SPARK_GRAFT_BENCH_SCALE_INPROC=1``
-    restores the legacy shared-session path (debug only).
+    JVM old-gen/GC pressure; clearCache touches neither), and the
+    interval_join ratio read 19-50 instead of its linear ~10.
+    Per-entry subprocesses give every x1/xN pair an identical,
+    residue-free JVM; each entry times x1 before xN inside its own
+    session, so the pair shares codegen/JIT warmth.
     """
+    import subprocess
+
     mult = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_MULT", "10"))
     out = {"mult": mult}
-
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALE_INPROC") == "1":
-        for name in SCALE_ENTRIES:
-            out[name] = _run_scale_entry(spark, sf_dir, name)
-        return out
-
-    import subprocess
 
     script = os.path.abspath(__file__)
     for name in SCALE_ENTRIES:
@@ -705,72 +607,34 @@ def main() -> None:
     if extra:
         names = [n.strip() for n in extra.split(",") if n.strip() in queries]
 
-    # cold pass: build each plan, first execution (codegen compile + run)
-    cold: dict[str, float] = {}
-    plans = {}
-    for name in names:
-        t0 = time.perf_counter()
-        plans[name] = queries[name](spark, sf_dir)
-        plans[name].toPandas()
-        cold[name] = round(time.perf_counter() - t0, 4)
+    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
+    builds = {name: partial(queries[name], spark, sf_dir) for name in queries}
 
-    # fresh-plan pass: rebuild the DataFrame (plan-cache miss, codegen warm)
-    fresh: dict[str, float] = {}
-    for name in names:
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).toPandas()
-        fresh[name] = round(time.perf_counter() - t0, 4)
+    # cold pass: each query's first build and collect (codegen compile)
+    cold = {name: round(_sample(spark, builds[name]), 4) for name in names}
 
-    # steady-state pass (headline): re-execute the prepared plans.
-    # Shuffle outputs are dropped first so every stage recomputes —
-    # re-execution skips only plan compile, never work.
-    # N timed executions (default 3): every run still recomputes all
-    # stages (shuffle outputs dropped first). The headline keeps the min
-    # (rejects OS-level noise — same treatment the DuckDB baseline below
-    # gets); the median is reported ALONGSIDE so a loaded machine is
+    # The headline keeps each query's min of ``runs`` samples (rejects
+    # OS-level noise — same treatment the DuckDB baseline below gets);
+    # the median is reported ALONGSIDE so a loaded machine is
     # self-evident: median far above min means the run was noisy, not
     # that the engine regressed.
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-
-    def _samples(plan) -> list[float]:
-        timed = _static_clone(spark, plan)  # warmed; reuse-proof
-        out = []
-        for _ in range(runs):
-            drop_all_shuffle_outputs(spark)
-            t0 = time.perf_counter()
-            timed.toPandas()
-            out.append(time.perf_counter() - t0)
-        return out
-
-    def _median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     for name in names:
-        xs = _samples(plans[name])
+        xs = [_sample(spark, builds[name]) for _ in range(runs)]
         timings[name] = round(min(xs), 4)
-        medians[name] = round(_median(xs), 4)
+        medians[name] = round(statistics.median(xs), 4)
 
-    # operator set: same steady-state protocol (warm once, then timed
-    # re-execution with shuffle outputs dropped). Overridden entries
-    # (eagerly-checkpointing plans) are rebuilt in a timeable form —
-    # see _bench_plan_overrides.
-    overrides = _bench_plan_overrides()
     op_timings: dict[str, float] = {}
     for name in (n for n in OPERATORS if n in queries):
-        plan = overrides.get(name, queries[name])(spark, sf_dir)
-        plan.toPandas()
-        op_timings[name] = round(min(_samples(plan)), 4)
-        # r11: scrub between entries — dead plan/clone references hold
-        # JVM broadcast variables and shuffle bookkeeping alive until a
-        # GC lets the ContextCleaner reap them; without this, late
-        # entries time against accumulated old-gen pressure (the same
-        # residue class the scale section now avoids via per-entry
-        # subprocesses; measured there at up to 4x inflation).
-        del plan
+        _sample(spark, builds[name])  # warm: codegen compile + JIT
+        op_timings[name] = round(
+            min(_sample(spark, builds[name]) for _ in range(runs)), 4
+        )
+        # dead DataFrames hold JVM broadcast variables and shuffle
+        # bookkeeping until a GC lets the ContextCleaner reap them;
+        # collect now so later entries do not time against the residue
+        # (the scale section measured it at up to 4x inflation)
         spark._jvm.System.gc()
 
     # same-run DuckDB baseline: each headline query's own oracle SQL over
@@ -798,7 +662,7 @@ def main() -> None:
     except Exception:
         duck = {}
 
-    # scale check: the two slowest pair-generators at 1× and 10× rows.
+    # scale check: the pair/explode-heavy operators at 1× and N× rows.
     # Replication scales the BLOCK/GROUP count (replica-salted keys and
     # tokens keep per-block size constant and shingle sets disjoint
     # across replicas), which is the operators' declared scaling contract
@@ -819,7 +683,6 @@ def main() -> None:
                 "queries_median": medians,
                 "bench_runs": runs,
                 "scale_check": scale,
-                "fresh_plan_total_sec": round(sum(fresh.values()), 4),
                 "cold_total_sec": round(sum(cold.values()), 4),
                 "operators": op_timings,
                 "operators_total_sec": round(sum(op_timings.values()), 4),

@@ -526,8 +526,6 @@ def kcore_members(
     rounds: int = KCORE_ROUNDS,
     a_col: str = "a",
     b_col: str = "b",
-    checkpoint_every: int = 0,
-    broadcast_keep: bool | None = None,
 ) -> DataFrame:
     """(node, degree): members of the k-core — the maximal subgraph
     where every node keeps degree ≥ k — after ``rounds`` synchronous
@@ -545,10 +543,10 @@ def kcore_members(
     identity) and the round count is part of the contract, exactly the
     ``pagerank``/``hits`` unrolled-iteration discipline above.
 
-    Scale shape (r12 rewrite — the partition-preserving DELTA form):
-    the former implementation re-materialized the induced ADJACENCY
+    Scale shape (the partition-preserving DELTA form): the adjacency
+    form (``kcore_adjacency``) re-materializes the induced ADJACENCY
     every sweep (two survivor joins over the edge table; under the
-    sort-merge fallback the nbr-side join re-keyed the full adjacency
+    sort-merge fallback the nbr-side join re-keys the full adjacency
     once per sweep — two edge-sized exchanges × rounds). Membership
     only needs per-node DEGREES, and a sweep changes a node's degree
     by exactly the number of its newly-dead neighbors — so the sweep
@@ -569,19 +567,20 @@ def kcore_members(
     - the degree update (drop dead, subtract deltas) is co-partitioned
       on ``node`` throughout — no further exchanges.
 
-    Per sweep the old form shuffled 2×|alive| edge rows; this form
+    Per sweep the adjacency form shuffles 2×|alive| edge rows; this form
     shuffles ≤ |touched nodes| count rows. Each edge (x,y) decrements
     y exactly once — at the sweep its other endpoint first dies while
     y is alive (dead sets are disjoint across sweeps), so the running
     degree equals the induced-subgraph degree the adjacency form
-    recomputed from scratch; nodes whose degree reaches 0 are excluded
+    recomputes from scratch; nodes whose degree reaches 0 are excluded
     at the end exactly as they vanish from a groupBy over adjacency
     rows. Result-equality against ``kcore_adjacency`` is pytest-gated.
-    Pass ``checkpoint_every`` to cut lineage/plan depth on long peels
-    (now checkpointing the NODE-sized degree table, not the edge
-    table). ``broadcast_keep`` keeps its three-state contract, applied
-    to the node-sized build sides (``None`` lets statistics + AQE
-    decide; ``True`` hints broadcast; ``False`` forces merge)."""
+
+    The plan is lazy: building it starts no Spark job, and the caller's
+    action runs every sweep, where AQE sees each node-sized side's
+    runtime size and broadcasts it when it fits (a surviving-node table
+    at extreme scale may not fit executor memory, and there AQE keeps
+    the shuffled join)."""
     sym = edges.select(
         F.col(a_col).cast("long").alias("node"),
         F.col(b_col).cast("long").alias("nbr"),
@@ -592,15 +591,8 @@ def kcore_members(
         )
     ).repartition("node")
 
-    def _hinted(df: DataFrame) -> DataFrame:
-        if broadcast_keep is True:
-            return F.broadcast(df)
-        if broadcast_keep is False:
-            return df.hint("merge")
-        return df
-
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("c"))
-    for i in range(rounds):
+    for _ in range(rounds):
         # dead/survivor split is a FILTER pair on the degree table, not
         # an anti-join — one fewer join per sweep and the degree table
         # is referenced twice per sweep instead of three times (the
@@ -609,49 +601,32 @@ def kcore_members(
         # way, but the optimizer walks the logical tree)
         dead = deg.where(F.col("c") < k).select("node")
         delta = (
-            sym.join(_hinted(dead), "node")
+            sym.join(dead, "node")
             .groupBy(F.col("nbr").alias("node"))
             .agg(F.count(F.lit(1)).alias("d"))
         )
         deg = (
             deg.where(F.col("c") >= k)
-            .join(_hinted(delta), "node", "left")
+            .join(delta, "node", "left")
             .select(
                 "node",
                 (F.col("c") - F.coalesce("d", F.lit(0))).alias("c"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            deg = deg.localCheckpoint()
     return deg.where(F.col("c") > 0).select(
         "node", F.col("c").cast("bigint").alias("degree")
     )
 
 
-def kcore_sweep(
-    alive: DataFrame, k: int, *, broadcast_keep: bool | None = None
-) -> DataFrame:
+def kcore_sweep(alive: DataFrame, k: int) -> DataFrame:
     """ONE synchronous peeling sweep over a (node, nbr) adjacency:
-    drop every node with degree < k, return the induced adjacency.
-
-    ``broadcast_keep`` is three-state (the ``fuzzy.broadcast_build``
-    discipline): ``None`` adds no hint — Catalyst plans from static
-    stats and AQE re-decides at runtime (measured at sf0.1: AQE
-    broadcasts every keep side at runtime, converting all 10 sweep
-    joins SMJ -> BHJ); ``True`` forces the broadcast in the STATIC
-    plan too — only when the caller knows the surviving-node set fits
-    executor memory (a k-core candidate set at extreme scale may not);
-    ``False`` forces the shuffled sort-merge form."""
+    drop every node with degree < k, return the induced adjacency."""
     keep = (
         alive.groupBy("node")
         .agg(F.count(F.lit(1)).alias("c"))
         .where(F.col("c") >= k)
         .select("node")
     )
-    if broadcast_keep is True:
-        keep = F.broadcast(keep)
-    elif broadcast_keep is False:
-        keep = keep.hint("merge")
     return alive.join(keep, "node").join(
         keep.withColumnRenamed("node", "nbr"), "nbr"
     )
@@ -665,11 +640,11 @@ def kcore_adjacency(
     a_col: str = "a",
     b_col: str = "b",
     checkpoint_every: int = 0,
-    broadcast_keep: bool | None = None,
 ) -> DataFrame:
     """The (node, nbr) adjacency surviving ``rounds`` peeling sweeps —
-    the composable core of ``kcore_members`` (tests run one extra
-    ``kcore_sweep`` over it to assert the fixpoint)."""
+    the reference form of ``kcore_members`` (tests compare the two and
+    run one extra ``kcore_sweep`` over it to assert the fixpoint).
+    ``checkpoint_every`` cuts the unrolled plan depth of long peels."""
     sym = edges.select(
         F.col(a_col).cast("long").alias("node"),
         F.col(b_col).cast("long").alias("nbr"),
@@ -679,11 +654,10 @@ def kcore_adjacency(
             F.col(a_col).cast("long").alias("nbr"),
         )
     )
-    # ONE upfront hash exchange on ``node`` (r11): every sweep's degree
+    # ONE upfront hash exchange on ``node``: every sweep's degree
     # aggregate groups by node, and the keep-side joins preserve the
     # partitioning whenever they run as broadcast joins (the strategy
-    # AQE picks at runtime for every sweep at gate scale, and the
-    # bench's measured form) — so all ``rounds`` aggregations become
+    # AQE picks at runtime for every sweep at gate scale) — so all ``rounds`` aggregations become
     # exchange-free complete aggregates over the established layout
     # instead of re-shuffling the (shrinking) adjacency once per sweep
     # (measured: 23 -> 15 hash exchanges in the static broadcast plan,
@@ -692,29 +666,16 @@ def kcore_adjacency(
     # and the upfront exchange is one among many, not a regression.
     alive = sym.repartition("node")
     for i in range(rounds):
-        alive = kcore_sweep(alive, k, broadcast_keep=broadcast_keep)
+        alive = kcore_sweep(alive, k)
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
             alive = alive.localCheckpoint()
     return alive
 
 
-def q_graph_kcore(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    checkpoint_every: int = 2,
-    broadcast_keep: bool | None = None,
-) -> DataFrame:
+def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """75-core of the co-purchase graph after 5 peeling sweeps (the
-    fixpoint on this corpus — asserted in tests).
-
-    ``checkpoint_every=2`` bounds unrolled-plan depth on the gate and
-    differential paths — but localCheckpoint is EAGER: rounds up to
-    the last checkpoint execute and persist at plan-BUILD time, and
-    dropping shuffle outputs does not invalidate checkpointed RDD
-    blocks. A timing harness must therefore build with
-    ``checkpoint_every=0`` (bench.py does) or it times only the
-    post-checkpoint rounds."""
+    fixpoint on this corpus — asserted in tests). Builds lazily: every
+    sweep runs in the caller's action."""
     from event_pipeline_spark.session import read_table
 
     li = read_table(spark, sf_dir, "lineitem").select(
@@ -730,16 +691,7 @@ def q_graph_kcore(
         .select(F.col("l_partkey").alias("a"), F.col("p2").alias("b"))
         .dropDuplicates(["a", "b"])
     )
-    # checkpoint_every=2 keeps the unrolled-plan depth bounded on the
-    # gate/differential paths (the degree table is referenced twice per
-    # sweep, so the un-checkpointed logical tree grows 2^rounds; the
-    # r12 delta form checkpoints the NODE-sized degree table, not the
-    # former edge-sized adjacency)
-    return kcore_members(
-        edges,
-        checkpoint_every=checkpoint_every,
-        broadcast_keep=broadcast_keep,
-    ).orderBy("node")
+    return kcore_members(edges).orderBy("node")
 
 
 def _kcore_oracle_sql(k: int, rounds: int) -> str:

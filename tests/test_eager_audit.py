@@ -24,6 +24,16 @@ def test_lm_queries_build_lazily(spark, sf_dir):
     assert not any(name.startswith("lm_") for name in ALLOWED)
 
 
+def test_graph_queries_build_lazily(spark, sf_dir):
+    """Every graph_* query builds with 0 jobs: graph_kcore's peeling
+    sweeps run in the caller's action, not in localCheckpoints taken
+    while the plan is built."""
+    counts = audit(spark, sf_dir, ["graph_"])
+    assert "graph_kcore" in counts, counts
+    assert not any(counts.values()), counts
+    assert not any(name.startswith("graph_") for name in ALLOWED)
+
+
 def test_running_total_queries_build_lazily(spark, sf_dir):
     """Every query built on running_total builds with 0 jobs: the
     offsets are computed in the plan, not collected to the driver."""

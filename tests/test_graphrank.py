@@ -284,37 +284,6 @@ def test_kcore_zero_degree_survivor_excluded(spark):
     assert kcore_members(df, k=2, rounds=1).collect() == []
 
 
-def test_kcore_broadcast_keep_same_result_and_plan(spark):
-    """broadcast_keep=True must change ONLY the join strategy (every
-    sweep's keep-side join becomes a broadcast hash join in the static
-    plan, the shape AQE produces at runtime), never the result."""
-    from event_pipeline_spark.operators.graphrank import kcore_members
-
-    clique = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
-    chain = [(5, 10), (10, 11), (11, 12)]
-    edges = spark.createDataFrame(clique + chain, "a long, b long")
-
-    default = kcore_members(edges, k=2, rounds=3)
-    hinted = kcore_members(edges, k=2, rounds=3, broadcast_keep=True)
-    assert sorted(map(tuple, default.collect())) == sorted(
-        map(tuple, hinted.collect())
-    )
-
-    # build a FRESH DataFrame after disabling AQE: ``hinted`` above has
-    # already materialized its lazy executedPlan during collect(), so
-    # asserting on it would read the cached AQE plan, not the static
-    # plan this test pins (the triangle plan-shape test's discipline)
-    prior = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        static = kcore_members(edges, k=2, rounds=3, broadcast_keep=True)
-        plan = static._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prior)
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_kcore_gate_fixpoint(spark, sf_dir):
     """The registered query's 5 rounds reach the fixpoint on the gate
     corpus (the fixed-round contract's convergence claim)."""

@@ -46,7 +46,6 @@ ALLOWED: dict[str, str] = {
     "dedup_keep_best": _CLUSTERS,
     "extract_html_fixture": _FIXTURE,
     "fuzzy_fs_clusters": _CLUSTERS,
-    "graph_kcore": "kcore_members: iterative peeling, localCheckpoint per sweep",
     "langid_fixture_predict": _FIXTURE + "; langid profile scalars collected",
     "langid_predict": "langid._profile_scalars: profile totals collected",
     "langid_score": "langid._profile_scalars: profile totals collected",
